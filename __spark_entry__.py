@@ -311,11 +311,18 @@ def _source_fingerprint(path: str) -> str:
     return f"{total}_{newest}"
 
 
+# on-disk layout of the ANN/IVF index caches, appended to their cache
+# keys: a cache written in an older layout (the partitionBy directory
+# tree) gets a different key, so it is rebuilt and evicted, never read
+_INDEX_LAYOUT = "sorted"
+
+
 def ensure_ann_index(spark: SparkSession, sf_dir: str) -> tuple[str, list[float]]:
     """Build (or reuse) the persisted multi-table ANN sketch for
     ``sf_dir``'s embeddings; returns (index_path, query_vec of vec 0).
-    Cache key includes a source-content fingerprint, so a changed
-    embeddings table rebuilds instead of reusing a stale index.
+    Cache key includes a source-content fingerprint and the index
+    layout, so a changed embeddings table or layout rebuilds instead
+    of reusing a stale index.
     Called UNTIMED by bench.py prep — the sketch build is one-time
     index construction, not per-query work (judge round-2 item 1)."""
     from zensearch_spark.operators.similarity import build_ann_index
@@ -325,7 +332,7 @@ def ensure_ann_index(spark: SparkSession, sf_dir: str) -> tuple[str, list[float]
     scratch = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
     tag = sf_dir.strip("/").replace("/", "_")
     fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-    idx_path = os.path.join(scratch, f"zs_ann_sketch_mt4_{tag}_{fp}")
+    idx_path = os.path.join(scratch, f"zs_ann_sketch_mt4_{tag}_{fp}_{_INDEX_LAYOUT}")
     # evict sketches of OLDER fingerprints of this same sf_dir — every
     # regeneration otherwise leaks a full sketch copy into tmpfs RAM
     # (ADVICE r3)
@@ -343,7 +350,8 @@ def ensure_ann_index(spark: SparkSession, sf_dir: str) -> tuple[str, list[float]
 def ensure_ivf_index(spark: SparkSession, sf_dir: str):
     """Build (or reuse) the IVF cell index + centroids for sf_dir's
     embeddings (same cache discipline as ensure_ann_index: content
-    fingerprint key, stale dirs evicted, build untimed in bench)."""
+    fingerprint + layout key, stale dirs evicted, build untimed in
+    bench)."""
     import numpy as np
 
     from zensearch_spark.operators.ivf import build_ivf_index, train_ivf_centroids
@@ -353,7 +361,7 @@ def ensure_ivf_index(spark: SparkSession, sf_dir: str):
     scratch = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
     tag = sf_dir.strip("/").replace("/", "_")
     fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-    idx_path = os.path.join(scratch, f"zs_ivf_{tag}_{fp}")
+    idx_path = os.path.join(scratch, f"zs_ivf_{tag}_{fp}_{_INDEX_LAYOUT}")
     import glob as _glob
     import shutil as _shutil
 
@@ -371,9 +379,9 @@ def ensure_ivf_index(spark: SparkSession, sf_dir: str):
 def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows-only by design (k-means centroids are a driver fit no SQL
     # mirror reproduces; the IVF mechanism is hash-checked by
-    # ivf_recall). The IVF (coarse-quantizer) twin of ann_topk: scan
-    # only the nprobe nearest cells via partition pruning, exact
-    # re-rank inside.
+    # ivf_recall). The IVF (coarse-quantizer) twin of ann_topk: read
+    # only the nprobe nearest cells via row-group pruning on the
+    # sorted cells, exact re-rank inside.
     from zensearch_spark.operators.ivf import ivf_topk
 
     cells, cent, qvec = ensure_ivf_index(spark, sf_dir)
@@ -382,9 +390,9 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle-checked since round 5: _ann_topk_sql recomputes the whole
-    # sketch pipeline from plane literals. Exercises the PRODUCTION shape: sketch table built once in ONE
-    # scan (partitionBy table_id+bucket), probes read only their
-    # buckets via partition pruning.
+    # sketch pipeline from plane literals. Exercises the PRODUCTION
+    # shape: sketch table built once in ONE scan (sorted by table_id,
+    # bucket, vec_id), probes read only their buckets' row groups.
     from zensearch_spark.operators.similarity import ann_topk_indexed
 
     idx_path, qvec = ensure_ann_index(spark, sf_dir)
@@ -878,7 +886,8 @@ _MD5_INT = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
 _MD5_INT_AT = "('0x' || substr({x}, {s}, 15))::BIGINT"
 
-# gram keys mirrored from dedup._gram_key_rows: one md5 per token,
+# gram keys mirrored from dedup._gram_key_arrays (the hash kernel in
+# functions/hashkernel.make_gram_keys_udf): one md5 per token,
 # hex split into two 60-bit halves mod P, rolling polynomial per
 # n-gram, key = poly1*P + poly2 -- the EXACT integer algebra the Spark
 # plan runs, so any hash collision affects both engines identically.
@@ -985,9 +994,10 @@ def _minhash_lsh_sql(num_hashes: int = 32, bands: int = 8) -> str:
     from zensearch_spark.operators.dedup import MINHASH_P, minhash_coeffs
 
     rows = num_hashes // bands
-    # mix(gk) = (gk >> 31) ^ gk before the mod — mirrors
-    # dedup._signatures_from_rows (both 31-bit key halves feed the
-    # universal hash; bare gk % P would see only the low half)
+    # mix(gk) = (gk >> 31) ^ gk before the mod — mirrors the MinHash
+    # signature of dedup._gram_key_arrays' hash kernel (both 31-bit key
+    # halves feed the universal hash; bare gk % P would see only the
+    # low half)
     sig_cols = ",\n         ".join(
         f"min(((xor(gk >> 31, gk) % {MINHASH_P}) * {a} + {b}) % {MINHASH_P}) AS h{i}"
         for i, (a, b) in enumerate(minhash_coeffs(num_hashes))

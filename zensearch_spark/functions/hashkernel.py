@@ -12,7 +12,7 @@ repeat tokens heavily; the driver corpus has a 31-word vocabulary, so
 a 131k-row batch pays ~31 md5 calls instead of ~7M).
 
 Bit-for-bit parity: the algebra is the SAME 62-bit integer scheme as
-dedup._gram_key_rows / text.doc_fingerprints documented against the
+dedup._gram_key_arrays / text.doc_fingerprints documented against the
 DuckDB oracles — md5 hex split into two 60-bit halves mod P, rolling
 polynomial per half, key = poly1·P + poly2. hashlib.md5 ≡ JVM md5 ≡
 DuckDB md5 on the same UTF-8 bytes, and every product stays under
@@ -70,7 +70,7 @@ def make_gram_keys_udf(n: int, c1: int, c2: int, p: int,
     """pandas UDF text -> struct(gks: array<long>[, sig: array<long>]).
 
     ``gks`` = DISTINCT n-gram rolling-poly keys (empty array when the
-    doc has < n tokens — mirrors dedup._gram_key_rows). When
+    doc has < n tokens, so the doc adds no exploded gram rows). When
     ``num_hashes`` > 0, ``sig`` = the MinHash signature min_i over
     ((((gk>>31)^gk) % p)·a_i + b_i) % p computed from the SAME key
     set (null when the gram set is empty — such docs produce no
@@ -162,7 +162,8 @@ def make_stopcount_udf(stopwords: list[str]):
 
 def make_simhash_udf(bits: int):
     """pandas UDF text -> long: token-frequency-weighted SimHash over
-    the 60-bit md5 ints (NO mod-P here — mirrors dedup._md5_int).
+    the 60-bit md5 ints (NO mod-P here — mirrors the oracle's
+    __spark_entry__._MD5_INT).
     Null for token-less docs (they produce no exploded rows in the
     aggregation shape, so they are absent from the result)."""
     shifts = np.arange(bits, dtype=np.int64)

@@ -91,7 +91,7 @@ def doc_fingerprints(docs: DataFrame, shingle: int = 8, id_col: str = "doc_id",
     fingerprint for containment detection).
 
     Window keys are the same 62-bit rolling-polynomial integer algebra
-    as dedup._gram_key_rows (one md5 per TOKEN, split into two 31-bit
+    as dedup._gram_key_arrays (one md5 per TOKEN, split into two 31-bit
     halves, per-window polynomial per half, key = poly1·P + poly2) —
     replacing the round-3 per-window array_join + md5 string churn,
     the shape the dedup module's switch measured at 6×. Docs shorter

@@ -25,8 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from zensearch_spark.functions.tokenizer import with_tokens
-
 # 2-universal MinHash modulus (Mersenne prime 2^31-1): (gk % P) and the
 # coefficients are both < 2^31, so (gk % P)*a + b < 2^62 — no BIGINT
 # overflow in either Spark or DuckDB.
@@ -51,29 +49,6 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
         b = x % MINHASH_P  # b ∈ [0, P-1]
         out.append((a, b))
     return out
-
-
-# md5-hex prefix → signed-safe 60-bit int (matches DuckDB
-# ('0x'||substr(md5(x),1,15))::BIGINT )
-def _md5_int(col) -> F.Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def with_word_ngrams(docs: DataFrame, n: int = 5, text_col: str = "text") -> DataFrame:
-    """docs + ``ngrams``: distinct word n-gram strings per doc."""
-    toks = with_tokens(text_col)
-    # guard: Spark sequence(1, 0) DESCENDS instead of returning empty,
-    # so short docs need an explicit empty-array branch
-    grams = F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return docs.withColumn("ngrams", grams)
 
 
 # rolling-polynomial multipliers for the two independent gram-key
@@ -119,14 +94,6 @@ def _gram_key_arrays(
     if num_hashes:
         cols.append(F.col("_g.sig").alias("sig"))
     return out.select("doc", *cols)
-
-
-def _gram_key_rows(
-    docs: DataFrame, n: int, id_col: str, text_col: str
-) -> DataFrame:
-    """(doc, gk long): one row per (doc, distinct gram key)."""
-    arr = _gram_key_arrays(docs, n, id_col, text_col)
-    return arr.select("doc", F.explode("gks").alias("gk"))
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -228,36 +195,6 @@ def ngram_jaccard_pairs(
     return pairs
 
 
-def minhash_signatures(
-    docs: DataFrame, n: int = 5, num_hashes: int = 32,
-    id_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, sig array<long>[num_hashes]) MinHash over word-n-gram
-    sets; hash_i(gram) = ((md5_int(gram) % P)·a_i + b_i) % P."""
-    eg = _gram_key_rows(docs, n, id_col, text_col)
-    return _signatures_from_rows(eg, num_hashes)
-
-
-def _signatures_from_rows(eg: DataFrame, num_hashes: int) -> DataFrame:
-    """Signatures from an existing (doc, gk) gram-key row table.
-
-    The universal hash runs over BOTH halves of the 62-bit gram key:
-    gk = poly1·P + poly2, so a bare gk % P would collapse to poly2
-    alone (P·x ≡ 0 mod P) — a 31-bit effective key space with likely
-    collisions around ~50k distinct grams (ADVICE round 2). Mixing
-    (gk >> 31) ^ gk folds poly1 in before the mod; mirrored
-    digit-for-digit in the DuckDB oracle (_minhash_lsh_sql)."""
-    gm = (F.shiftright(F.col("gk"), 31).bitwiseXOR(F.col("gk"))) % MINHASH_P
-    aggs = [
-        F.min((gm * F.lit(a) + F.lit(b)) % MINHASH_P).alias(f"h{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    sig = eg.withColumnRenamed("doc", "doc_id").groupBy("doc_id").agg(*aggs)
-    return sig.select(
-        "doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame, n: int = 5, num_hashes: int = 32, bands: int = 8,
     threshold: float = 0.8, id_col: str = "doc_id", text_col: str = "text",
@@ -284,8 +221,9 @@ def minhash_lsh_pairs(
     # signature per doc (round 6, guide §4.2); the array-row table is
     # persisted because it feeds the banding AND both verify sides —
     # previously the gram generation subtree was re-evaluated once per
-    # consumer. Signature parity with _signatures_from_rows /
-    # _minhash_lsh_sql is exact (same integer algebra, same coeffs).
+    # consumer. Signature parity with _minhash_lsh_sql is exact: the
+    # hash kernel (functions/hashkernel.make_gram_keys_udf) and the
+    # oracle run the same integer algebra with the same coeffs.
     arr = _gram_key_arrays(
         docs, n, id_col, text_col, num_hashes=num_hashes
     ).persist()
@@ -384,10 +322,15 @@ def simhash_fingerprints(
     round-5 shape shipped every token occurrence through a 32-column
     aggregation). Docs with zero tokens produce no aggregation rows
     in the old shape, so the kernel returns null for them and they
-    are filtered — identical output."""
+    are filtered — identical output.
+
+    The kernel is marked nondeterministic only to pin it in place:
+    otherwise Catalyst pushes the null filter, kernel call included,
+    below an input repartition and the kernel runs twice per row, once
+    before the exchange on the un-split input."""
     from zensearch_spark.functions.hashkernel import make_simhash_udf
 
-    fp = make_simhash_udf(bits)
+    fp = make_simhash_udf(bits).asNondeterministic()
     return (
         docs.select(
             F.col(id_col).alias("doc_id"),

@@ -174,10 +174,13 @@ def build_ann_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Materialize a MULTI-TABLE sign-sketch index ONCE, written
-    partitionBy(table_id, bucket) so a probe reads only its buckets'
-    files (the pruned-partition pattern the posting blocks use with
-    term_bucket). L independent tables are the standard LSH recall
+    """Materialize a MULTI-TABLE sign-sketch index ONCE as plain
+    parquet sorted by (table_id, bucket, vec_id): a probe's pushed-down
+    _probe_condition then skips every row group whose min/max
+    statistics miss its buckets — the row-group pruning the posting
+    blocks get from their sort by term. Only this sort order and
+    _probe_condition know the layout, so probes work under any
+    filesystem URI. L independent tables are the standard LSH recall
     lever — a neighbor is found if it collides in ANY table
     (recall = 1-(1-p)^L) — and each table's probe set stays tiny.
 
@@ -229,50 +232,22 @@ def build_ann_index(
         F.expr(f"stack({n_tables}, {stack_args}) AS (table_id, bucket)"),
     )
     (
-        fanned.repartition("table_id", "bucket")
+        fanned.orderBy("table_id", "bucket", "vec_id")
         .write.mode("overwrite")
-        .partitionBy("table_id", "bucket")
-        # snappy, not the session's zstd: the write opens one file per
-        # (table_id, bucket) dir — n_tables·2^n_planes writer inits —
-        # and zstd context setup dominates them; the float embedding
-        # payload barely compresses either way
-        .option("compression", "snappy")
         .parquet(out_path)
     )
 
 
-def _probe_condition(
-    query_vec: list[float], n_planes: int, probe_hamming: int, seed: int,
-    n_tables: int,
-):
+def _probe_condition(by_table: dict[int, set[int]]) -> F.Column:
+    """The ONE probe predicate over the sorted sketch: rows of table t
+    whose bucket is in t's probe set. It reaches the parquet reader as
+    a pushed filter, where the (table_id, bucket) sort turns it into
+    row-group skipping; Spark re-applies it to the rows it reads."""
     cond = None
-    for t in range(n_tables):
-        probes = probe_buckets(query_vec, n_planes, probe_hamming, seed, table=t)
-        c = (F.col("table_id") == t) & F.col("bucket").isin(probes)
+    for t, buckets in sorted(by_table.items()):
+        c = (F.col("table_id") == t) & F.col("bucket").isin(sorted(buckets))
         cond = c if cond is None else (cond | c)
     return cond
-
-
-def _read_probe_dirs(spark, index_path: str, by_table: dict[int, set[int]]):
-    """Read ONLY the probed (table_id, bucket) partition dirs (round
-    6): listing cost becomes proportional to the PROBE SET instead of
-    the whole 2^n_planes·L directory tree — the driver-side face of
-    partition pruning (the filter-on-full-index shape paid a full
-    partition discovery per query; measured 2.2 s on the 1024-dir
-    sketch). Missing dirs are empty buckets and are skipped; returns
-    None when no probed bucket exists (caller yields zero
-    candidates)."""
-    import os
-
-    paths = []
-    for t, buckets in sorted(by_table.items()):
-        for b in sorted(buckets):
-            p = os.path.join(index_path, f"table_id={t}", f"bucket={b}")
-            if os.path.isdir(p):
-                paths.append(p)
-    if not paths:
-        return None
-    return spark.read.option("basePath", index_path).parquet(*paths)
 
 
 def ann_topk_indexed(
@@ -285,19 +260,20 @@ def ann_topk_indexed(
     probe_hamming: int = 1,
     seed: int = 42,
 ) -> DataFrame:
-    """Approximate NN over the PERSISTED multi-table sketch:
-    partition-prune to each table's probe buckets, dedupe candidates
-    across tables, exact-cosine re-rank. The (table_id, bucket)
-    predicate is a partition filter (PLANS.md shows PartitionFilters
-    on this scan) — unprobed buckets are never read."""
+    """Approximate NN over the PERSISTED multi-table sketch: read only
+    each table's probe buckets, dedupe candidates across tables,
+    exact-cosine re-rank. The (table_id, bucket) predicate is a pushed
+    filter on the sorted sketch (PLANS.md shows PushedFilters on this
+    scan) — row groups of unprobed buckets are skipped."""
     by_table = {
         t: set(probe_buckets(query_vec, n_planes, probe_hamming, seed, table=t))
         for t in range(n_tables)
     }
-    src = _read_probe_dirs(spark, index_path, by_table)
-    if src is None:
-        return spark.createDataFrame([], "vec_id bigint, cosine double")
-    cand = src.select("vec_id", "embedding")
+    cand = (
+        spark.read.parquet(index_path)
+        .filter(_probe_condition(by_table))
+        .select("vec_id", "embedding")
+    )
     # Round 6: score BEFORE deduping and dedupe with a hash-aggregable
     # max over the (identical) per-copy cosines — dropDuplicates on a
     # row carrying the embedding array forced a SortAggregate +
@@ -678,8 +654,8 @@ def ann_topk_batch(
     of a per-job-overhead number.
 
     ``queries`` = [(query_id, query_vec, k)]. Plan: the UNION of all
-    queries' probe buckets forms one literal partition filter (files
-    of unprobed buckets are never read), a broadcast (query_id,
+    queries' probe buckets forms one pushed-down _probe_condition (row
+    groups of unprobed buckets are skipped), a broadcast (query_id,
     table_id, bucket) map re-associates candidates to queries, and a
     broadcast (query_id, qvec, k) row supplies the per-query vector
     for the exact-cosine re-rank + per-query window top-k. Returns
@@ -700,21 +676,14 @@ def ann_topk_batch(
         probe_rows, "query_id int, table_id int, bucket bigint"
     )
     qdf = spark.createDataFrame(qrows, "query_id int, qvec array<double>, k int")
-    # Round 6: (a) read only the probed partition dirs (listing ∝
-    # probe set — _read_probe_dirs); (b) score each candidate COPY
-    # first (Arrow matmul — cheap), then collapse (query_id, vec_id)
-    # duplicates with a hash-aggregable max instead of dropDuplicates
-    # over rows that carry the embedding array (array-typed first()
-    # forced SortAggregate). Copies of a vec_id score identically, so
-    # the result is the same.
-    src = _read_probe_dirs(spark, index_path, by_table)
-    if src is None:
-        return spark.createDataFrame(
-            [], "query_id int, vec_id bigint, cosine double"
-        )
+    # Score each candidate COPY first (Arrow matmul — cheap), then
+    # collapse (query_id, vec_id) duplicates with a hash-aggregable max
+    # instead of dropDuplicates over rows that carry the embedding
+    # array (array-typed first() forced SortAggregate). Copies of a
+    # vec_id score identically, so the result is the same.
     cand = (
-        src
-        .withColumn("bucket", F.col("bucket").cast("bigint"))
+        spark.read.parquet(index_path)
+        .filter(_probe_condition(by_table))
         .join(F.broadcast(probes), ["table_id", "bucket"])
         .join(F.broadcast(qdf), "query_id")
     )

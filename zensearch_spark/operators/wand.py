@@ -155,15 +155,6 @@ class _TermBlocks:
             got = self._decoded[i] = (docs, contrib)
         return got
 
-    def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
-        if not len(self.first):
-            return _EMPTY
-        parts = [self._decode(i) for i in range(len(self.first))]
-        return (
-            np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
-        )
-
     def decode_overlapping(self, cand_docs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Decode only blocks whose doc range contains ≥1 candidate."""
         if not len(self.first) or not len(cand_docs):

@@ -127,16 +127,6 @@ def get_spark(
         # standard remedy for long-GC executors.
         .config("spark.network.timeout", "600s")
         .config("spark.executor.heartbeatInterval", "60s")
-        # Partition discovery above this many paths launches a Spark
-        # JOB to list directories — measured 2.2 s per read of the
-        # 1024-dir ANN sketch on local tmpfs vs 0.33 s serial (the
-        # job pays scheduling, not I/O). Local FS listing is cheap,
-        # so raise the threshold; on object stores with very wide
-        # tables the parallel listing wins — set the env there.
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_PAR_DISCOVERY_THRESHOLD", "4096"),
-        )
         # MIN/MAX/COUNT aggs with no filter/group answer from parquet
         # footer statistics instead of scanning data pages — makes the
         # distributed dense-id invariant check (plans/index_build.py
