@@ -542,12 +542,9 @@ def _q_emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zensearch_spark.operators.similarity import embedding_neardup_gemm
 
     # vec_id < 1000 cap mirrored in the oracle; sf0.01 has 500
-    # vectors, so the gate's results are the full uncapped set.
-    # Round 6: same exact all-pairs cosines, computed by the packed-
-    # block GEMM engine instead of the per-element Catalyst fold
-    # (guide §4.2) — the fold engine remains available as
-    # similarity.embedding_neardup_pairs for cross-checks, and the
-    # uncapped entry is emb_neardup_gemm below.
+    # vectors, so the gate's results are the full uncapped set. The
+    # exact all-pairs cosines come from the packed-block GEMM engine
+    # (guide §4.2); the uncapped entry is emb_neardup_gemm below.
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 1000)
     return embedding_neardup_gemm(emb, threshold=0.4)
 

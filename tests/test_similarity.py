@@ -92,6 +92,23 @@ def _qvec(emb, vec_id: int) -> list[float]:
     return [float(x) for x in row["embedding"]]
 
 
+def _np_matrix(emb) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, float64 rows) of an embeddings DataFrame, sorted by vec_id."""
+    rows = sorted(emb.select("vec_id", "embedding").collect())
+    ids = np.asarray([r["vec_id"] for r in rows], dtype=np.int64)
+    return ids, np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+
+
+def _np_exact_pairs(emb, threshold: float) -> set[tuple[int, int, float]]:
+    """NumPy reference of exact near-dup pairs: (vec_a < vec_b, cosine)
+    with cosine = dot / (norm · norm) rounded to 6 dp, ≥ threshold."""
+    ids, m = _np_matrix(emb)
+    nrm = np.sqrt((m * m).sum(axis=1))
+    cos = np.round((m @ m.T) / (nrm[:, None] * nrm[None, :]), 6)
+    ii, jj = np.nonzero((cos >= threshold) & (ids[:, None] < ids[None, :]))
+    return {(int(ids[i]), int(ids[j]), float(cos[i, j])) for i, j in zip(ii, jj)}
+
+
 def test_ann_recall_clustered(spark, clustered, clustered_sketch):
     """recall@10 ≥ 0.9 vs exact cosine at the DEFAULT probe budget
     (8 planes × 4 tables, hamming 1 → ≤ 4·9/256 ≈ 14% of the data)."""
@@ -177,22 +194,36 @@ def test_ann_probe_scan_prunes_partitions(spark, clustered, clustered_sketch):
     assert 0 < len(matched) < len(groups), (len(matched), len(groups))
 
 
+def test_ann_build_plans_bucket_kernel_once(spark, clustered, monkeypatch):
+    """The plan build_ann_index writes evaluates the sign-sketch kernel
+    in exactly ONE ArrowEvalPython node with ONE Python UDF output: the
+    per-table _bk[t] extractions and the stack fan-out must not copy
+    it."""
+    from pyspark.sql.readwriter import DataFrameWriter
+    from zensearch_spark.operators.similarity import build_ann_index
+
+    plans = []
+
+    def capture(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    build_ann_index(clustered, "unwritten", dim=DIM, n_planes=8, n_tables=4)
+    assert len(plans) == 1
+    nodes = [ln for ln in plans[0].splitlines() if "ArrowEvalPython" in ln]
+    assert len(nodes) == 1, plans[0]
+    assert nodes[0].count("pythonUDF") == 1, nodes[0]
+
+
 def test_embedding_neardup_lsh_vs_exact(spark, clustered):
     """LSH-blocked near-dup pairs: precision must be 1 (candidates are
     exact-cosine verified) and recall high on clustered embeddings —
-    within-cluster pairs collide in ≥1 of the 4 tables. Both verify
-    engines (packed-block GEMM default, Catalyst fold cross-check)
-    must return the identical pair set."""
+    within-cluster pairs collide in ≥1 of the 4 tables."""
     from zensearch_spark.caching import release
-    from zensearch_spark.operators.similarity import (
-        embedding_neardup_lsh, embedding_neardup_pairs,
-    )
+    from zensearch_spark.operators.similarity import embedding_neardup_lsh
 
     thr = 0.8
-    exact = {
-        (r["vec_a"], r["vec_b"])
-        for r in embedding_neardup_pairs(clustered, threshold=thr).collect()
-    }
+    exact = {(a, b) for a, b, _ in _np_exact_pairs(clustered, thr)}
     assert len(exact) > 100, "clustered fixture must produce near-dup pairs"
     lsh_df = embedding_neardup_lsh(
         clustered, threshold=thr, dim=DIM, n_planes=8, n_tables=4, block=128
@@ -203,26 +234,14 @@ def test_embedding_neardup_lsh_vs_exact(spark, clustered):
     recall = len(lsh & exact) / len(exact)
     assert recall >= 0.8, recall
 
-    fold = {
-        (r["vec_a"], r["vec_b"])
-        for r in embedding_neardup_lsh(
-            clustered, threshold=thr, dim=DIM, n_planes=8, n_tables=4,
-            verify="fold",
-        ).collect()
-    }
-    assert fold == lsh, "verify engines must agree on the pair set"
-
 
 def test_lsh_gemm_verify_plan_has_no_catalyst_lambda(spark, clustered):
-    """The composed LSH→GEMM path (judge round-3 item 2) must not plan
-    a per-pair higher-order-function fold. The LSH plan still contains
-    zip_with/aggregate for the SKETCH (one bucket dot product per row,
-    referenced once — that part is correct); the per-PAIR cosine must
-    run in the packed-block NumPy engine. Checked two ways: the LSH
-    plan carries MapInPandas (the verify engine), and the verify
-    engine's own plan — from candidate pairs to cosines — has no
-    higher-order functions at all."""
-    from pyspark.sql import functions as F  # noqa: F811
+    """The whole LSH near-dup plan — sketch and per-pair verify — must
+    plan no higher-order-function fold: buckets come from the Arrow
+    sign-sketch kernel and candidate cosines from the packed-block
+    NumPy engine (MapInPandas). The verify engine's own plan, from
+    candidate pairs to cosines, is checked the same way."""
+    from zensearch_spark.caching import release
     from zensearch_spark.operators.similarity import (
         embedding_neardup_lsh, verify_pairs_gemm,
     )
@@ -234,43 +253,36 @@ def test_lsh_gemm_verify_plan_has_no_catalyst_lambda(spark, clustered):
             )
         )
 
-    lsh_plan = fmt(
-        embedding_neardup_lsh(
-            clustered, threshold=0.8, dim=DIM, n_planes=8, n_tables=4,
-            block=128,
-        )
+    lsh_df = embedding_neardup_lsh(
+        clustered, threshold=0.8, dim=DIM, n_planes=8, n_tables=4, block=128,
     )
-    assert "MapInPandas" in lsh_plan
-
     pairs = spark.createDataFrame(
         [(0, 25), (1, 26), (3, 128)], "vec_a long, vec_b long"
     )
-    verify_plan = fmt(verify_pairs_gemm(clustered, pairs, 0.8, block=128))
-    assert "MapInPandas" in verify_plan
-    assert "zip_with" not in verify_plan
-    assert "aggregate(" not in verify_plan
+    verify_df = verify_pairs_gemm(clustered, pairs, 0.8, block=128)
+    for df in (lsh_df, verify_df):
+        plan = fmt(df)
+        release(df)
+        assert "MapInPandas" in plan
+        assert "zip_with" not in plan
+        assert "aggregate(" not in plan
 
 
 def test_verify_pairs_gemm_release_frees_cache(spark, clustered):
     """verify_pairs_gemm pins its persisted pack; caching.release must
     leave no cached RDDs behind (ADVICE r3 lifecycle contract)."""
     from zensearch_spark.caching import release
-    from zensearch_spark.operators.similarity import (
-        embedding_neardup_pairs, verify_pairs_gemm,
-    )
+    from zensearch_spark.operators.similarity import verify_pairs_gemm
 
+    exact = _np_exact_pairs(clustered, 0.8)
     # delta assertion: other modules' session-scoped fixtures may hold
     # their own caches — this test owns only what IT creates
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    pairs = embedding_neardup_pairs(clustered, threshold=0.8).select(
-        "vec_a", "vec_b"
+    pairs = spark.createDataFrame(
+        [(a, b) for a, b, _ in exact], "vec_a long, vec_b long"
     )
     df = verify_pairs_gemm(clustered, pairs, threshold=0.8, block=128)
     got = {(r["vec_a"], r["vec_b"], r["cosine"]) for r in df.collect()}
-    exact = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in embedding_neardup_pairs(clustered, threshold=0.8).collect()
-    }
     assert got == exact, "verify over the full exact pair list = exact result"
     during = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert during == before + 1, (before, during)
@@ -279,20 +291,14 @@ def test_verify_pairs_gemm_release_frees_cache(spark, clustered):
 
 
 def test_gemm_matches_exact_pairs(spark, clustered):
-    """Block-matrix GEMM engine returns exactly the zip_with/aggregate
-    engine's pairs and 6-dp cosines (block=128 → a real multi-block
-    grid over the 500-vector fixture)."""
-    from zensearch_spark.operators.similarity import (
-        embedding_neardup_gemm, embedding_neardup_pairs,
-    )
+    """Block-matrix GEMM engine returns exactly the NumPy reference's
+    pairs and 6-dp cosines (block=128 → a real multi-block grid over
+    the 500-vector fixture)."""
+    from zensearch_spark.caching import release
+    from zensearch_spark.operators.similarity import embedding_neardup_gemm
 
     thr = 0.8
-    exact = sorted(
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in embedding_neardup_pairs(clustered, threshold=thr).collect()
-    )
-    from zensearch_spark.caching import release
-
+    exact = sorted(_np_exact_pairs(clustered, thr))
     gemm_df = embedding_neardup_gemm(clustered, threshold=thr, block=128)
     gemm = sorted(
         (r["vec_a"], r["vec_b"], r["cosine"]) for r in gemm_df.collect()
@@ -320,18 +326,44 @@ def test_batch_matches_single_probes(spark, clustered, clustered_sketch):
         assert batch.get(vid, []) == single, vid
 
 
-def test_indexed_matches_inline_ann(spark, clustered, clustered_sketch):
-    """Persisted-sketch path returns the same rows as the inline
-    sketch path (same planes/seed → same buckets → same candidates)."""
-    from zensearch_spark.operators.similarity import ann_topk, ann_topk_indexed
+def test_indexed_matches_numpy_ann(spark, clustered, clustered_sketch):
+    """The persisted-sketch probe returns the rows of a NumPy pipeline
+    written here from the planes alone: per-table sign buckets, the
+    hamming-1 probe set around the query's bucket, candidates from ANY
+    table, exact cosine re-rank by (cosine desc, vec_id asc), 6 dp."""
+    from zensearch_spark.operators.similarity import _planes, ann_topk_indexed
 
-    q = _qvec(clustered, 7)
-    a = [(r["vec_id"], r["cosine"]) for r in ann_topk(clustered, q, k=10).collect()]
-    b = [
-        (r["vec_id"], r["cosine"])
-        for r in ann_topk_indexed(spark, clustered_sketch, q, k=10).collect()
-    ]
-    assert a == b
+    k, n_planes, n_tables, seed = 10, 8, 4, 42
+    ids, m = _np_matrix(clustered)
+    weights = 1 << np.arange(n_planes)
+    for vid in (7, 99):
+        q = np.asarray(_qvec(clustered, vid))
+        cand = np.zeros(len(ids), dtype=bool)
+        for t in range(n_tables):
+            planes = _planes(DIM, n_planes, seed, t)
+            rows = ((m @ planes.T) > 0) @ weights
+            qb = int(((planes @ q) > 0) @ weights)
+            flips = np.asarray([bin(int(b) ^ qb).count("1") for b in rows])
+            cand |= flips <= 1
+        cid, cm = ids[cand], m[cand]
+        cos = (cm @ q) / (np.sqrt((cm * cm).sum(axis=1)) * np.sqrt(q @ q))
+        top = np.lexsort((cid, -cos))[:k]
+        want = [(int(cid[i]), float(np.round(cos[i], 6))) for i in top]
+        got = [
+            (r["vec_id"], r["cosine"])
+            for r in ann_topk_indexed(spark, clustered_sketch, list(q), k=k).collect()
+        ]
+        assert got == want, vid
+
+
+def test_probe_buckets_rejects_unsupported_hamming():
+    """Only 0, 1 and 2 bit flips are enumerated: a larger budget must
+    fail loudly, not quietly return the hamming-2 set."""
+    from zensearch_spark.operators.similarity import probe_buckets
+
+    assert len(probe_buckets([1.0] * DIM, n_planes=8, probe_hamming=2)) == 37
+    with pytest.raises(ValueError, match="probe_hamming"):
+        probe_buckets([1.0] * DIM, n_planes=8, probe_hamming=3)
 
 
 # ------------------------------------------------------------------ IVF

@@ -4,7 +4,13 @@ Brute-force cosine top-k as the exact baseline, plus an LSH-bucketed
 (random-hyperplane / sign-sketch) variant as the scale path: at 100 TB
 the brute force is a full scan per probe; the sketch turns it into a
 bucket-pruned scan with exact re-rank inside candidate buckets.
-All JVM column algebra (F.zip_with / F.aggregate) — no Python UDF.
+
+Every vector kernel is float64 NumPy behind an Arrow boundary: cosines
+are one matmul per batch, and every sign-sketch bucket (index build,
+near-dup blocking, query probes) comes from the one kernel
+_sign_buckets. No Catalyst higher-order-function fold is planned:
+those are interpreted per element and re-evaluated per referencing
+expression.
 """
 
 from __future__ import annotations
@@ -14,36 +20,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _dot(a, b) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a) -> F.Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-# ---- round-6 vectorized cosine kernels (guide §4.2) -------------------
-# The Catalyst zip_with/aggregate folds above are interpreted per
-# element (HOFs do not codegen) and Catalyst re-evaluates the whole
-# tree per referencing expression. These Arrow kernels compute a
-# whole batch of cosines as one float64 NumPy matmul. Float sums may
-# reassociate at ~1e-16 relative; every consumer rounds scores to 6 dp
-# and orders continuous-valued cosines, so results are identical on
-# real data (verified against the DuckDB oracles at sf0.01/0.1/1.0 —
-# the same measure-zero caveat every dot-product oracle here already
-# documents). The fold versions stay for the pure-DataFrame
-# cross-check paths.
+# Float sums in the matmuls below may reassociate at ~1e-16 relative;
+# every consumer rounds scores to 6 dp and orders continuous-valued
+# cosines, so results are identical on real data (verified against the
+# DuckDB oracles at sf0.01/0.1/1.0 — the same measure-zero caveat every
+# dot-product oracle here already documents).
 
 
 def _stack64(vals) -> "np.ndarray":
@@ -93,10 +74,9 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact brute-force cosine top-k against a literal query vector.
 
-    Round 6: one Arrow matmul per batch (_cosine_lit) replaces the
-    interpreted fold, and the raw value is computed ONCE and rounded
-    in a later projection (the round-5 plan evaluated the whole fold
-    tree twice — once for _raw, once for the rounded copy)."""
+    One Arrow matmul per batch (_cosine_lit); the raw value is
+    computed ONCE and rounded in a later projection, so the kernel is
+    not evaluated a second time for the rounded copy."""
     raw = _cosine_lit(F.col(vec_col), query_vec)
     # sort on the raw value, round only for display — rounding before
     # the sort would turn 1e-7 gaps into ties and break oracle parity
@@ -114,25 +94,62 @@ def _planes(dim: int, n_planes: int, seed: int, table: int = 0):
     return rng.standard_normal((n_planes, dim))
 
 
-def hyperplane_sketch(
+def _sign_buckets(m: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """THE sign-sketch kernel: (n, T) int64 bucket ids of the float64
+    rows of ``m`` (n × dim) under ``planes`` (T × n_planes × dim, one
+    _planes stack per table). Bit i of a row's bucket in table t is
+    set iff its dot with plane i of table t is > 0; all T·n_planes
+    dots are one matmul."""
+    n_tables, n_planes, dim = planes.shape
+    bits = (m @ planes.reshape(n_tables * n_planes, dim).T) > 0
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
+    return (bits.reshape(len(m), n_tables, n_planes) * weights).sum(axis=2)
+
+
+def _sketch_rows(
     emb: DataFrame,
     dim: int,
-    n_planes: int = 16,
-    seed: int = 42,
-    table: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    n_planes: int,
+    n_tables: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
 ) -> DataFrame:
-    """(vec_id, bucket int): sign sketch over n_planes deterministic
-    random hyperplanes — one LSH table used by the ANN index."""
-    planes = _planes(dim, n_planes, seed, table)
-    bucket = F.lit(0).cast("long")
-    for i in range(n_planes):
-        p = F.array(*[F.lit(float(x)) for x in planes[i]])
-        bit = (_dot(F.col(vec_col), p) > 0).cast("long")
-        bucket = bucket + F.shiftleft(bit, i)
-    return emb.select(F.col(id_col).alias("vec_id"), bucket.alias("bucket"),
-                      F.col(vec_col).alias("embedding"))
+    """(vec_id, embedding, table_id, bucket): the sign-sketch fan-out.
+    ONE scan evaluates _sign_buckets once per Arrow batch for all T
+    tables, and stack() fans the T bucket ids out to (table_id, bucket)
+    rows — one sketch scan per table would read the input T times."""
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import pandas_udf
+
+    # single-file inputs otherwise compute every bucket on one core
+    # (guide §2.5); the narrow shuffle is priced far below the matmuls
+    par = emb.sparkSession.sparkContext.defaultParallelism
+    if emb.rdd.getNumPartitions() < par:
+        emb = emb.repartition(par)
+    planes = np.stack([_planes(dim, n_planes, seed, t) for t in range(n_tables)])
+
+    @pandas_udf(T.ArrayType(T.LongType()))
+    def buckets(v: pd.Series) -> pd.Series:
+        if not len(v):
+            return pd.Series([], dtype=object)
+        return pd.Series(list(_sign_buckets(_stack64(v.to_numpy()), planes)))
+
+    # the kernel is projected once as _bk; the T _bk[t] extractions in
+    # the next projection read that one result
+    one_scan = emb.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("embedding"),
+        buckets(F.col(vec_col)).alias("_bk"),
+    ).select(
+        "vec_id", "embedding",
+        *[F.col("_bk")[t].alias(f"_b{t}") for t in range(n_tables)],
+    )
+    stack_args = ", ".join(f"{t}, _b{t}" for t in range(n_tables))
+    return one_scan.select(
+        "vec_id", "embedding",
+        F.expr(f"stack({n_tables}, {stack_args}) AS (table_id, bucket)"),
+    )
 
 
 def probe_buckets(
@@ -143,15 +160,15 @@ def probe_buckets(
     table: int = 0,
 ) -> list[int]:
     """The query's sketch bucket plus every bucket within
-    ``probe_hamming`` bit flips — the multiprobe set an ANN lookup
-    scans in one table. Driver-side NumPy over the same deterministic
-    planes the sketch build uses."""
-    planes = _planes(len(query_vec), n_planes, seed, table)
-    qsig = 0
+    ``probe_hamming`` ∈ {0, 1, 2} bit flips — the multiprobe set an ANN
+    lookup scans in one table. The query's bucket comes from the same
+    _sign_buckets kernel and deterministic planes the sketch build
+    uses."""
+    if probe_hamming not in (0, 1, 2):
+        raise ValueError(f"probe_hamming must be 0, 1 or 2, got {probe_hamming!r}")
     qv = np.asarray(query_vec, dtype=np.float64)
-    for i in range(n_planes):
-        if float(planes[i] @ qv) > 0:
-            qsig |= 1 << i
+    planes = _planes(len(qv), n_planes, seed, table)
+    qsig = int(_sign_buckets(qv[None, :], planes[None])[0, 0])
     probes = {qsig}
     if probe_hamming >= 1:
         probes |= {qsig ^ (1 << i) for i in range(n_planes)}
@@ -184,53 +201,9 @@ def build_ann_index(
     lever — a neighbor is found if it collides in ANY table
     (recall = 1-(1-p)^L) — and each table's probe set stays tiny.
 
-    ONE scan of the embeddings table computes all L bucket columns
-    (they are all projections of the same row), then stack() fans
-    them out to (table_id, bucket) rows — the round-2 shape (one
-    hyperplane_sketch scan per table, unioned) read the table L
-    times, which at 100 TB makes the build L× the dominant cost.
-    Round 6: all n_tables · n_planes sign dots per row are ONE Arrow
-    matmul (batch × dim) @ (dim × T·planes) in a pandas UDF instead of
-    interpreted zip_with folds — bucket values verified identical to
-    the fold path on the driver corpora (sign of a float64 dot; both
-    orders agree except on exact-zero dots, measure-zero here and
-    already the documented caveat of the ANN oracle)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    # single-file inputs otherwise compute every bucket on one core
-    # (guide §2.5); the narrow shuffle is priced far below the matmuls
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < par:
-        emb = emb.repartition(par)
-    pl = np.stack(
-        [_planes(dim, n_planes, seed, t) for t in range(n_tables)]
-    ).reshape(n_tables * n_planes, dim).T  # (dim, T·planes) float64
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def buckets(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype=object)
-        m = _stack64(v.to_numpy())
-        bits = (m @ pl) > 0
-        b = (bits.reshape(len(m), n_tables, n_planes) * weights).sum(axis=2)
-        return pd.Series(list(b))
-
-    one_scan = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        buckets(F.col(vec_col)).alias("_bk"),
-    ).select(
-        "vec_id", "embedding",
-        *[F.col("_bk")[t].alias(f"_b{t}") for t in range(n_tables)],
-    )
-    stack_args = ", ".join(f"{t}, _b{t}" for t in range(n_tables))
-    fanned = one_scan.select(
-        "vec_id",
-        "embedding",
-        F.expr(f"stack({n_tables}, {stack_args}) AS (table_id, bucket)"),
-    )
+    The rows come from _sketch_rows: ONE scan of the embeddings table
+    computes all L bucket ids with the _sign_buckets Arrow kernel."""
+    fanned = _sketch_rows(emb, dim, n_planes, n_tables, seed, id_col, vec_col)
     (
         fanned.orderBy("table_id", "bucket", "vec_id")
         .write.mode("overwrite")
@@ -287,38 +260,6 @@ def ann_topk_indexed(
         .orderBy(F.desc("_raw"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", F.round("_raw", 6).alias("cosine"))
-    )
-
-
-def embedding_neardup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """EXACT embedding-cosine near-duplicate pairs (vec_a < vec_b,
-    cosine ≥ threshold) — the oracle-checkable baseline of the dedup
-    family's embedding axis (SURVEY training-data ops). All-pairs
-    self-join: O(n²/2) cosines, fine for a capped/sampled slice and
-    for verification; the 100 TB path is embedding_neardup_lsh below,
-    which prunes candidates through the same sign-sketch buckets the
-    ANN index uses and exact-verifies only colliding pairs."""
-    e = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("nrm"),
-    )
-    a = e.select(
-        F.col("vid").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    b = e.select(
-        F.col("vid").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    raw = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", F.round(raw, 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
     )
 
 
@@ -384,14 +325,15 @@ def embedding_neardup_gemm(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact near-dup pairs via BLOCK-MATRIX NumPy GEMM: vectors are
-    grid-partitioned into ⌈n/block⌉ row blocks, the upper-triangular
-    block-pair grid is exploded into tasks, and each task multiplies
-    two (≤block × dim) float64 matrices — one BLAS gemm per block pair
-    instead of the Catalyst higher-order-function path's interpreted
-    per-element lambda. Same pairs as embedding_neardup_pairs; float
-    sums may differ at ~1e-15 (BLAS reassociates), so results are
-    rounded to 6 dp like every score surface.
+    """EXACT embedding-cosine near-duplicate pairs (vec_a < vec_b,
+    cosine ≥ threshold) — the oracle-checkable baseline of the dedup
+    family's embedding axis (SURVEY training-data ops) — via
+    BLOCK-MATRIX NumPy GEMM: vectors are grid-partitioned into
+    ⌈n/block⌉ row blocks, the upper-triangular block-pair grid is
+    exploded into tasks, and each task multiplies two (≤block × dim)
+    float64 matrices — one BLAS gemm per block pair. Float sums may
+    differ from a sequential dot at ~1e-15 (BLAS reassociates), so
+    results are rounded to 6 dp like every score surface.
 
     Scale shape: work = B² /2 tasks of bounded size, shuffle =
     each block replicated ≤B times (the standard dense all-pairs
@@ -564,40 +506,22 @@ def embedding_neardup_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int | None = None,
-    verify: str = "gemm",
     block: int = 1024,
 ) -> DataFrame:
-    """Near-dup pairs via sign-sketch blocking: one scan computes all
-    L bucket columns (same stack shape as build_ann_index), candidates
-    are pairs sharing a (table_id, bucket) in ANY table, and ONLY
-    candidates pay an exact cosine (precision 1 vs the exact operator;
-    recall = LSH collision probability, gated in tests on clustered
-    data). ``max_bucket_size`` drops degenerate buckets (d docs emit
-    d²/2 candidates) exactly like the MinHash-LSH cap.
+    """Near-dup pairs via sign-sketch blocking: the (vec_id, table_id,
+    bucket) rows of _sketch_rows (the same kernel and fan-out as
+    build_ann_index), candidates are pairs sharing a (table_id, bucket)
+    in ANY table, and ONLY candidates pay an exact cosine, computed by
+    the packed-block NumPy engine verify_pairs_gemm (precision 1 vs the
+    exact operator; recall = LSH collision probability, gated in tests
+    on clustered data). ``max_bucket_size`` drops degenerate buckets
+    (d docs emit d²/2 candidates) exactly like the MinHash-LSH cap.
 
-    ``verify``: "gemm" (default — candidate cosines via the packed-
-    block NumPy engine, verify_pairs_gemm; the 100 TB composition the
-    round-3 verdict asks for) or "fold" (the Catalyst zip_with/
-    aggregate per-pair fold — interpreted per element, kept as the
-    pure-DataFrame cross-check path). Both round to 6 dp, so the pair
-    set is identical (gated in tests). With "gemm" the returned
-    DataFrame pins a persisted intermediate — call
+    The returned DataFrame pins a persisted intermediate — call
     ``zensearch_spark.caching.release(df)`` after materializing."""
-    cols = []
-    for t in range(n_tables):
-        planes = _planes(dim, n_planes, seed, t)
-        bucket = F.lit(0).cast("long")
-        for i in range(n_planes):
-            p = F.array(*[F.lit(float(x)) for x in planes[i]])
-            bit = (_dot(F.col(vec_col), p) > 0).cast("long")
-            bucket = bucket + F.shiftleft(bit, i)
-        cols.append(bucket.alias(f"_b{t}"))
-    stack_args = ", ".join(f"{t}, _b{t}" for t in range(n_tables))
-    banded = emb.select(
-        F.col(id_col).alias("vid"), *cols
-    ).select(
-        "vid", F.expr(f"stack({n_tables}, {stack_args}) AS (table_id, bucket)")
-    )
+    # the join below reads only ids and buckets, so Catalyst prunes the
+    # embedding column from the fan-out right after the kernel
+    banded = _sketch_rows(emb, dim, n_planes, n_tables, seed, id_col, vec_col)
     if max_bucket_size is not None:
         big = (
             banded.groupBy("table_id", "bucket")
@@ -611,31 +535,14 @@ def embedding_neardup_lsh(
             b,
             (F.col("a.table_id") == F.col("b.table_id"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vid") < F.col("b.vid")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
-        .select(F.col("a.vid").alias("vec_a"), F.col("b.vid").alias("vec_b"))
+        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
-    if verify == "gemm":
-        return verify_pairs_gemm(
-            emb, cand, threshold=threshold, block=block,
-            id_col=id_col, vec_col=vec_col,
-        )
-    e = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("nrm"),
-    )
-    ea = e.select(F.col("vid").alias("vec_a"), F.col("v").alias("va"),
-                  F.col("nrm").alias("na"))
-    eb = e.select(F.col("vid").alias("vec_b"), F.col("v").alias("vb"),
-                  F.col("nrm").alias("nb"))
-    raw = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select("vec_a", "vec_b", F.round(raw, 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
+    return verify_pairs_gemm(
+        emb, cand, threshold=threshold, block=block,
+        id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -766,30 +673,3 @@ def cosine_topk_batch(
         .orderBy("query_id", "rn")
         .select("query_id", "vec_id", F.round("_raw", 6).alias("cosine"))
     )
-
-
-def ann_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 20,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    probe_hamming: int = 1,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate NN with inline (non-persisted) sketches — the
-    one-shot convenience path, same candidates as ann_topk_indexed.
-    Repeated queries should build_ann_index once and probe the
-    bucket-pruned table instead."""
-    dim = len(query_vec)
-    cand = None
-    for t in range(n_tables):
-        probes = probe_buckets(query_vec, n_planes, probe_hamming, seed, table=t)
-        sk = hyperplane_sketch(emb, dim, n_planes=n_planes, seed=seed, table=t,
-                               id_col=id_col, vec_col=vec_col)
-        c = sk.filter(F.col("bucket").isin(probes)).select("vec_id", "embedding")
-        cand = c if cand is None else cand.unionByName(c)
-    cand = cand.dropDuplicates(["vec_id"])
-    return cosine_topk(cand, query_vec, k=k, id_col="vec_id", vec_col="embedding")

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -57,15 +58,30 @@ def pick_local_dir() -> str:
     return "/dev/shm/spark-local" if cost <= 0.25 else "/tmp/spark-local"
 
 
+def default_sizing(environ: Mapping[str, str] = os.environ) -> tuple[int, str]:
+    """(cores, driver_mem) for a ``get_spark`` call that passes neither:
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    every CPU this process may run on and a driver heap of a quarter of
+    physical RAM (at least 1 GB) — local mode runs every task inside
+    the driver JVM, so its heap is the whole engine's memory."""
+    cores = environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    driver_mem = (
+        environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1, round(phys_gb / 4))}g"
+    )
+    return int(cores), driver_mem
+
+
 def get_spark(
     app: str = "zensearch_spark",
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
     driver_mem: str | None = None,
 ) -> SparkSession:
-    cores = int(cores or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    default_cores, default_mem = default_sizing()
+    cores = int(cores or default_cores)
     shuffle_partitions = shuffle_partitions or max(cores, 8)
-    driver_mem = driver_mem or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    driver_mem = driver_mem or default_mem
     # Make the package importable in Python workers regardless of cwd —
     # the local-mode analog of `spark-submit --py-files zensearch_spark.zip`.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
