@@ -149,14 +149,15 @@ class Meter:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     import __spark_entry__ as entrymod
     from zensearch_spark.caching import release
     from zensearch_spark.plans.index_build import build_index
     from zensearch_spark.plans.query_plan import BM25Index
-    from zensearch_spark.session import get_spark
+    from zensearch_spark.session import default_sizing, get_spark
     from zensearch_spark.sources.corpus import generate_transcripts
+
+    cores, _ = default_sizing()
 
     # hold the dev lock: a concurrent scaling campaign pauses instead
     # of fighting this bench for the host (both would lose)

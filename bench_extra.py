@@ -37,7 +37,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from jobs.stage_scaling import DEV_LOCK, PHASE_FACTOR, PhaseState
     from zensearch_spark.caching import release
-    from zensearch_spark.session import get_spark
+    from zensearch_spark.session import default_sizing, get_spark
 
     # pause any concurrent scaling campaign while we measure (and
     # vice versa) — same cooperative lock bench.py holds
@@ -50,7 +50,7 @@ def main() -> None:
 
     atexit.register(lambda: os.path.exists(DEV_LOCK) and os.unlink(DEV_LOCK))
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores, _ = default_sizing()
     spark = get_spark(app="zensearch-bench-extra", cores=cores)
     sf_dir = args.sf
 

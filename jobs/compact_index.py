@@ -26,8 +26,9 @@ def main() -> None:
     ap.add_argument("--deltas", default=None,
                     help="postings_delta dir from streaming ingest "
                          "(optional — compaction re-tokenises otherwise)")
-    ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=None,
+                    help="local cores (default: SPARK_GRAFT_CPUS, else "
+                         "every CPU this process may run on)")
     args = ap.parse_args()
 
     from zensearch_spark.plans.compaction import compact_index

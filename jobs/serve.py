@@ -14,7 +14,7 @@ resident frontend sees.
     # REPL: one query per line, one JSON answer line per query
     python jobs/serve.py --index /tmp/idx
 
-    # batched: every N lines answered as ONE Spark job
+    # batched: every N lines answered as ONE request (one salt cogroup)
     python jobs/serve.py --index /tmp/idx --batch-size 8
 
     # self-test: report cold vs warm q/s over the reference query set
@@ -65,7 +65,7 @@ def main() -> None:
     ap.add_argument("-k", type=int, default=10)
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--batch-size", type=int, default=1,
-                    help="answer every N stdin lines as one Spark job")
+                    help="answer every N stdin lines as one request")
     ap.add_argument("--no-cache-blocks", action="store_true",
                     help="skip pinning the blocks table (default: pin — "
                          "the resident-session configuration)")

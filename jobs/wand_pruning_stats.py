@@ -47,13 +47,16 @@ def main() -> None:
                          "(at 10^12 turns every term is in it)")
     args = ap.parse_args()
 
+    from pyspark.sql import functions as F
+
     from tests.oracle_bm25 import reference_query_set
+    from zensearch_spark.functions.spark_hash import term_bucket
     from zensearch_spark.plans.index_build import build_index
     from zensearch_spark.plans.query_plan import BM25Index
     from zensearch_spark.session import get_spark
     from zensearch_spark.sources.corpus import generate_transcripts
 
-    spark = get_spark(app="zs-wand-pruning", cores=32)
+    spark = get_spark(app="zs-wand-pruning")
     scratch = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
     root = args.index or os.path.join(
         scratch, f"zs_pruning_idx_s{args.n_salt_ranges}"
@@ -75,7 +78,14 @@ def main() -> None:
         "blocks_decoded": spark.sparkContext.accumulator(0),
     }
     df = index.topk_batch(batch, counters=counters)
-    plan = df._jdf.queryExecution().explainString(
+    # topk_batch returns the merged rows as a local relation; explain
+    # the block scan it ran, under the same term_bucket/term predicate
+    terms = sorted(r["term"] for r in index.term_rows(*[q for _, q, _ in batch]))
+    buckets = sorted({term_bucket(t, int(index.stats["n_term_buckets"])) for t in terms})
+    scan = index._blocks.filter(
+        F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
+    )
+    plan = scan._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )

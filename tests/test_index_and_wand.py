@@ -4,6 +4,8 @@ set — SURVEY.md §5.2 layers 1, 2, 4."""
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -89,6 +91,30 @@ def test_hot_term_salted_across_groups(built):
     assert n_salts > 1, "Zipf-head term must be split across salt groups"
 
 
+@pytest.fixture(scope="module")
+def cached(built):
+    """A serving handle over the same root with the blocks pinned."""
+    index, *_ = built
+    handle = BM25Index(index.spark, index.paths.root, cache_blocks=True)
+    yield handle
+    handle._blocks.unpersist()
+
+
+_GROUP_IDS = itertools.count()
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs started while it ran)."""
+    sc = spark.sparkContext
+    gid = f"zs-test-jobs-{next(_GROUP_IDS)}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
 def _rank_identical(got, want):
     assert len(got) == len(want), (got[:5], want[:5], len(got), len(want))
     for (gd, gs), (wd, ws) in zip(got, want):
@@ -128,10 +154,7 @@ def test_hydration_roundtrip(built):
         assert r["conv_id"] == by_id.loc[r["doc_id"], "conv_id"]
 
 
-def test_batch_matches_per_query(built):
-    """topk_batch must return exactly the per-query oracle results for
-    the whole reference set in one job."""
-    index, oracle, *_ = built
+def _assert_batch_matches_oracle(index, oracle):
     qset = reference_query_set()
     batch = index.topk_batch(
         [(q["query_id"], q["query_text"], q["k"]) for q in qset]
@@ -142,6 +165,13 @@ def test_batch_matches_per_query(built):
     for q in qset:
         want = oracle.score_query(q["query_text"], q["k"])
         _rank_identical(got.get(q["query_id"], []), want)
+
+
+def test_batch_matches_per_query(built):
+    """topk_batch must return exactly the per-query oracle results for
+    the whole reference set in one batched request."""
+    index, oracle, *_ = built
+    _assert_batch_matches_oracle(index, oracle)
 
 
 def test_grouped_topk_per_conversation(built, spark):
@@ -201,3 +231,32 @@ def test_batch_counters_show_block_skipping(built, spark):
     total, decoded = counters["blocks_total"].value, counters["blocks_decoded"].value
     assert total > 0
     assert 0 < decoded <= total
+
+
+def test_cached_handle_matches_oracle(built, cached):
+    """The resident-serving handle (blocks pinned in executor memory)
+    answers the reference set rank-identically to the oracle."""
+    _assert_batch_matches_oracle(cached, built[1])
+
+
+@pytest.mark.parametrize("handle", ["one_shot", "cached"])
+def test_request_job_count(built, cached, spark, handle):
+    """One search request is the salt cogroup (two shuffle-map jobs and
+    its result job under AQE); the per-query top-k merge runs on the
+    driver and adds none."""
+    index = built[0] if handle == "one_shot" else cached
+    qset = reference_query_set()[:8]
+    batch = [(q["query_id"], q["query_text"], q["k"]) for q in qset]
+    index.topk_batch(batch).collect()  # warm-up: term cache, block pin
+    rows, jobs = _jobs_run(spark, lambda: index.topk_batch(batch).collect())
+    assert rows and jobs <= 3, jobs
+
+
+def test_unknown_terms_empty_without_jobs(built, spark):
+    """A query with no dictionary term returns no rows and runs no job."""
+    index, *_ = built
+    batch = [(0, "qzxqv wkqjzz", 10)]
+    assert index.term_rows(batch[0][1]) == []
+    index.topk_batch(batch).collect()  # warm-up: term cache load
+    rows, jobs = _jobs_run(spark, lambda: index.topk_batch(batch).collect())
+    assert rows == [] and jobs == 0

@@ -17,10 +17,11 @@ distributed two-level top-k:
 - survivors are RESCORED in ascending-term order with a fixed fold
   so final floats match the NumPy oracle and the naive DataFrame
   path (three-way agreement, SURVEY §5.2 layer 4);
-- per-group top-k rows are merged by a final tiny per-query window
-  rank — TakeOrderedAndProject-sized work over ≤ groups·k rows.
+- per-group top-k rows (≤ groups·k per query) are fetched once as
+  Arrow and merged on the driver by one NumPy lexsort — no window or
+  sort exchange after the cogroup.
 
-Queries run BATCHED: the whole query set shares one Spark job and,
+Queries run BATCHED: the whole query set shares one salt cogroup and,
 within a salt group, one decode cache (a block decoded for query A
 is reused by query B) — this is what makes queries/sec a throughput
 number instead of a per-job-overhead number.
@@ -35,7 +36,8 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,6 +57,9 @@ TOPK_SCHEMA = T.StructType(
 )
 
 _EMPTY = (np.empty(0, np.int64), np.empty(0, np.float64))
+_NO_ROWS = pd.DataFrame(
+    {"query_id": np.empty(0, np.int32), "doc_id": _EMPTY[0], "score": _EMPTY[1]}
+)
 
 
 def _tfcomp(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
@@ -389,13 +394,7 @@ def evaluate_salt_group(
             sum(len(tb._decoded) for tb in terms.values())
         )
     if not qids:
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype=np.int32),
-                "doc_id": pd.Series([], dtype=np.int64),
-                "score": pd.Series([], dtype=np.float64),
-            }
-        )
+        return _NO_ROWS
     return pd.DataFrame(
         {
             "query_id": np.concatenate(qids),
@@ -403,6 +402,17 @@ def evaluate_salt_group(
             "score": np.concatenate(scores_out),
         }
     )
+
+
+def _merge_topk(cands: pa.Table, k_of: dict[int, int]) -> pa.Table:
+    """Merge the per-salt-group top-k lists: each query's first
+    ``k_of[query_id]`` rows by (query_id, score desc, doc_id asc)."""
+    qid = cands["query_id"].to_numpy()
+    order = np.lexsort((cands["doc_id"].to_numpy(), -cands["score"].to_numpy(), qid))
+    qids, starts, counts = np.unique(qid[order], return_index=True, return_counts=True)
+    rank = np.arange(len(order)) - np.repeat(starts, counts)
+    limit = np.repeat([k_of[q] for q in qids.tolist()], counts)
+    return cands.take(order[rank < limit])
 
 
 def wand_topk_batch(
@@ -416,7 +426,9 @@ def wand_topk_batch(
     bounds_exact: bool = True,
     counters: dict | None = None,
 ) -> DataFrame:
-    """One Spark job answering the whole query batch.
+    """Exact top-k for the whole query batch, computed eagerly: the
+    salt cogroup's Spark jobs run inside this call and the result is a
+    local relation, so collecting it runs no further job.
 
     ``queries``: [(query_id, query_text, k)].
     ``term_rows``: collected term_dict rows covering the union of all
@@ -437,7 +449,7 @@ def wand_topk_batch(
             parsed.append((qid, wmap, k))
             all_terms.update(wmap)
     if not parsed:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return spark.createDataFrame(pa.Table.from_pandas(_NO_ROWS), TOPK_SCHEMA)
 
     terms = sorted(all_terms)
     buckets = sorted({term_bucket(t, n_term_buckets) for t in terms})
@@ -447,13 +459,7 @@ def wand_topk_batch(
 
     def run(bl_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(bl_pdf):  # dl-only salt group (no query-term blocks)
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series([], dtype=np.int32),
-                    "doc_id": pd.Series([], dtype=np.int64),
-                    "score": pd.Series([], dtype=np.float64),
-                }
-            )
+            return _NO_ROWS
         return evaluate_salt_group(
             bl_pdf, dl_pdf, idf_map, parsed, avgdl, bounds_exact,
             counters=counters,
@@ -464,20 +470,8 @@ def wand_topk_batch(
         .cogroup(doc_lens.groupby("salt"))
         .applyInPandas(run, schema=TOPK_SCHEMA)
     )
-    # per-query k as a literal map: k is driver-known, so a
-    # createDataFrame + broadcast-join here would cost a whole extra
-    # Spark job per batch just to ship ≤|queries| ints (measured ~0.5 s
-    # fixed cost; judge round-1 item 10)
-    k_map = F.create_map(
-        *[x for qid, _, k in parsed for x in (F.lit(qid), F.lit(k))]
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k_map[F.col("query_id")])
-        .orderBy("query_id", "rn")
-        .select("query_id", "doc_id", "score")
-    )
+    k_of = {qid: k for qid, _, k in parsed}
+    return spark.createDataFrame(_merge_topk(cands.toArrow(), k_of), TOPK_SCHEMA)
 
 
 def wand_topk(

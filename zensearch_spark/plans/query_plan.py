@@ -115,11 +115,12 @@ class BM25Index:
     def topk_batch(
         self, queries: list[tuple[int, str, int]], counters: dict | None = None
     ) -> DataFrame:
-        """(query_id, doc_id, score) for a whole query set in ONE
-        Spark job — the throughput path (decoded blocks shared across
-        queries within each salt group). ``counters``: optional
-        {"blocks_total", "blocks_decoded"} Spark accumulators for
-        block-skipping evidence."""
+        """(query_id, doc_id, score) for a whole query set as one
+        request — the throughput path (decoded blocks shared across
+        queries within each salt group). Eager: the Spark work runs in
+        this call and the result is a local relation. ``counters``:
+        optional {"blocks_total", "blocks_decoded"} Spark accumulators
+        for block-skipping evidence."""
         return wand_topk_batch(
             self.spark,
             self._blocks,
