@@ -235,6 +235,36 @@ def test_embedding_neardup_lsh_vs_exact(spark, clustered):
     assert recall >= 0.8, recall
 
 
+@pytest.mark.parametrize("max_bucket_size", [None, 50])
+def test_embedding_neardup_lsh_kernel_runs_once(
+    spark, clustered, monkeypatch, max_bucket_size
+):
+    """The sign-sketch kernel sees each input row once: both sides of
+    the self-join (and the bucket-size count) read one persisted
+    sketch. The counting wrapper is resolved when the UDF is pickled,
+    so it ships with it to the workers; release frees the sketch."""
+    from zensearch_spark.caching import release
+    from zensearch_spark.operators import similarity
+
+    rows = spark.sparkContext.accumulator(0)
+    original = similarity._sign_buckets
+
+    def counted(m, planes):
+        rows.add(len(m))
+        return original(m, planes)
+
+    monkeypatch.setattr(similarity, "_sign_buckets", counted)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    df = similarity.embedding_neardup_lsh(
+        clustered, threshold=0.8, dim=DIM, n_planes=8, n_tables=4,
+        block=128, max_bucket_size=max_bucket_size,
+    )
+    assert df.count() > 0
+    release(df)
+    assert rows.value == clustered.count()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_lsh_gemm_verify_plan_has_no_catalyst_lambda(spark, clustered):
     """The whole LSH near-dup plan — sketch and per-pair verify — must
     plan no higher-order-function fold: buckets come from the Arrow

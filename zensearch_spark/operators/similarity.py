@@ -517,11 +517,16 @@ def embedding_neardup_lsh(
     on clustered data). ``max_bucket_size`` drops degenerate buckets
     (d docs emit d²/2 candidates) exactly like the MinHash-LSH cap.
 
-    The returned DataFrame pins a persisted intermediate — call
+    The returned DataFrame pins its persisted intermediates (the
+    sketch and verify_pairs_gemm's pack) — call
     ``zensearch_spark.caching.release(df)`` after materializing."""
-    # the join below reads only ids and buckets, so Catalyst prunes the
-    # embedding column from the fan-out right after the kernel
-    banded = _sketch_rows(emb, dim, n_planes, n_tables, seed, id_col, vec_col)
+    from zensearch_spark.caching import pin
+
+    # ids and buckets persisted once: the kernel runs once per row, not
+    # once per side of the self-join (or again for the bucket sizes)
+    banded = sketch = _sketch_rows(
+        emb, dim, n_planes, n_tables, seed, id_col, vec_col
+    ).select("vec_id", "table_id", "bucket").persist()
     if max_bucket_size is not None:
         big = (
             banded.groupBy("table_id", "bucket")
@@ -540,10 +545,11 @@ def embedding_neardup_lsh(
         .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
-    return verify_pairs_gemm(
+    verified = verify_pairs_gemm(
         emb, cand, threshold=threshold, block=block,
         id_col=id_col, vec_col=vec_col,
     )
+    return pin(verified, sketch)
 
 
 def ann_topk_batch(
