@@ -277,7 +277,7 @@ def main() -> None:
 
     timings["wand_query_set_warm"] = meter.run("wand_query_set_warm", warm_once)
     warm_qps = round(len(qset) / timings["wand_query_set_warm"], 3)
-    warm_index._blocks.unpersist()
+    warm_index.release()
     log(f"[bench] wand_query_set_warm: {timings['wand_query_set_warm']}s min "
         f"({warm_qps} q/s)")
 

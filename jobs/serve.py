@@ -6,7 +6,8 @@ requests over one warm engine (express-server/src/app/index.ts:175-203:
 the Express route handler holding a live DB pool + search service).
 jobs/query.py is the one-shot/batched CLI twin; THIS job is the
 lifecycle twin: ONE SparkSession + ONE warm BM25Index (term cache
-loaded once, blocks optionally pinned in executor memory) answering
+loaded once, blocks and doc_len sidecar optionally pinned in executor
+memory, laid out by salt so a request runs one Spark job) answering
 successive query batches from stdin until EOF — every batch after the
 first runs at warm steady-state, which is the number a real user of a
 resident frontend sees.
@@ -17,15 +18,16 @@ resident frontend sees.
     # batched: every N lines answered as ONE request (one salt cogroup)
     python jobs/serve.py --index /tmp/idx --batch-size 8
 
-    # self-test: report cold vs warm q/s over the reference query set
+    # self-test: report cold vs warm q/s and Spark jobs per round over
+    # the reference query set
     python jobs/serve.py --index /tmp/idx --selftest --rounds 3
 
 Protocol: plain query text per line ("\\q" or EOF ends the session);
 answers go to stdout as one JSON object per line; all diagnostics on
 stderr. At 100 TB the shape is identical — the warm index handle holds
 only model-size state (term dictionary cache) on the driver plus the
-optionally-cached blocks table on executors; per-batch work stays the
-bucket-pruned WAND plan.
+optionally-cached blocks and doc_len tables on executors; per-batch
+work stays the bucket-pruned WAND plan.
 """
 
 from __future__ import annotations
@@ -67,7 +69,7 @@ def main() -> None:
     ap.add_argument("--batch-size", type=int, default=1,
                     help="answer every N stdin lines as one request")
     ap.add_argument("--no-cache-blocks", action="store_true",
-                    help="skip pinning the blocks table (default: pin — "
+                    help="skip pinning the blocks and doc_len tables (default: pin — "
                          "the resident-session configuration)")
     ap.add_argument("--selftest", action="store_true",
                     help="run the reference query set --rounds times "
@@ -89,16 +91,18 @@ def main() -> None:
 
     if args.selftest:
         from tests.oracle_bm25 import reference_query_set
+        from tests.test_index_and_wand import _jobs_run
 
         qs = [q["query_text"] for q in reference_query_set()]
         rounds = []
         for r in range(args.rounds):
-            out = _answer_batch(index, qs, args.k, r)
-            rounds.append({k: out[k] for k in
-                           ("batch", "n_queries", "wall_sec",
-                            "queries_per_sec", "warm")})
+            out, jobs = _jobs_run(spark, lambda: _answer_batch(index, qs, args.k, r))
+            rounds.append({**{k: out[k] for k in
+                              ("batch", "n_queries", "wall_sec",
+                               "queries_per_sec", "warm")},
+                           "jobs": jobs})
             sys.stderr.write(f"[serve] round {r}: {out['wall_sec']}s "
-                             f"({out['queries_per_sec']} q/s)\n")
+                             f"({out['queries_per_sec']} q/s, {jobs} jobs)\n")
         warm = min(r["wall_sec"] for r in rounds[1:]) if len(rounds) > 1 else None
         print(json.dumps({
             "mode": "selftest", "rounds": rounds,

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.oracle_bm25 import reference_query_set
+from tests.test_index_and_wand import _jobs_run
 from zensearch_spark.plans.compaction import compact_index
 from zensearch_spark.plans.index_build import build_index
 from zensearch_spark.plans.query_plan import BM25Index
@@ -86,6 +87,28 @@ def test_queries_rank_identical_to_full_rebuild(compacted):
         got = _hydrated(inc, q["query_text"], q["k"])
         want = _hydrated(full, q["query_text"], q["k"])
         assert got == want, (qid, got[:5], want[:5])
+
+
+def test_cached_handle_over_compacted_root(compacted, spark):
+    """A serving handle over the compacted root: its salt-partitioned
+    cache holds blocks from several segments, several encode runs per
+    (term, salt), and must still answer rank-identically to the full
+    rebuild, in one Spark job per request."""
+    _inc, full, root, *_ = compacted
+    cached = BM25Index(spark, root, cache_blocks=True)
+    try:
+        assert len(cached.paths.stats["segments"]["blocks"]) > 1
+        for qid in QIDS:
+            q = reference_query_set()[qid]
+            got = _hydrated(cached, q["query_text"], q["k"])
+            want = _hydrated(full, q["query_text"], q["k"])
+            assert got == want, (qid, got[:5], want[:5])
+        batch = [(q["query_id"], q["query_text"], q["k"])
+                 for q in reference_query_set()[:8]]
+        rows, jobs = _jobs_run(spark, lambda: cached.topk_batch(batch).collect())
+        assert rows and jobs == 1, jobs
+    finally:
+        cached.release()
 
 
 def test_compacted_wand_matches_naive(compacted):

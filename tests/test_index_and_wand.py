@@ -4,7 +4,7 @@ set — SURVEY.md §5.2 layers 1, 2, 4."""
 
 from __future__ import annotations
 
-import itertools
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -93,20 +93,20 @@ def test_hot_term_salted_across_groups(built):
 
 @pytest.fixture(scope="module")
 def cached(built):
-    """A serving handle over the same root with the blocks pinned."""
+    """A serving handle over the same root with the blocks and the
+    doc_len sidecar pinned."""
     index, *_ = built
     handle = BM25Index(index.spark, index.paths.root, cache_blocks=True)
     yield handle
-    handle._blocks.unpersist()
-
-
-_GROUP_IDS = itertools.count()
+    handle.release()
 
 
 def _jobs_run(spark, fn):
-    """(fn(), number of Spark jobs started while it ran)."""
+    """(fn(), number of Spark jobs started while it ran). The job group
+    is unique per call: pytest may import this module a second time
+    under another name, and a reused group id counts the old jobs."""
     sc = spark.sparkContext
-    gid = f"zs-test-jobs-{next(_GROUP_IDS)}"
+    gid = f"zs-test-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(gid, gid)
     try:
         out = fn()
@@ -241,15 +241,28 @@ def test_cached_handle_matches_oracle(built, cached):
 
 @pytest.mark.parametrize("handle", ["one_shot", "cached"])
 def test_request_job_count(built, cached, spark, handle):
-    """One search request is the salt cogroup (two shuffle-map jobs and
-    its result job under AQE); the per-query top-k merge runs on the
-    driver and adds none."""
+    """One search request is the salt cogroup; the per-query top-k merge
+    runs on the driver and adds no job. On the one-shot handle the
+    cogroup shuffles its pruned slice (two shuffle-map jobs and its
+    result job under AQE); the cached handle's tables are already
+    partitioned and sorted by salt, so it runs the result job alone."""
     index = built[0] if handle == "one_shot" else cached
     qset = reference_query_set()[:8]
     batch = [(q["query_id"], q["query_text"], q["k"]) for q in qset]
     index.topk_batch(batch).collect()  # warm-up: term cache, block pin
     rows, jobs = _jobs_run(spark, lambda: index.topk_batch(batch).collect())
-    assert rows and jobs <= 3, jobs
+    assert rows and (jobs == 1 if handle == "cached" else jobs <= 3), jobs
+
+
+def test_release_unpersists_both_tables(built, spark):
+    """``release`` frees the blocks and the doc_len sidecar alike."""
+    index, *_ = built
+    handle = BM25Index(spark, index.paths.root, cache_blocks=True)
+    handle.topk_batch([(0, reference_query_set()[0]["query_text"], 10)])
+    tables = [handle._blocks, handle._doc_lens]
+    assert all(t.storageLevel.useMemory for t in tables)
+    handle.release()
+    assert not any(t.storageLevel.useMemory for t in tables)
 
 
 def test_unknown_terms_empty_without_jobs(built, spark):

@@ -1,5 +1,6 @@
 """get_spark's default sizing comes from the host, not a fixed box, and
-its Python workers start without Spark's archives on their path."""
+its Python workers start without Spark's archives on their path, with
+pandas and pyarrow loaded and frozen out of the per-task collection."""
 
 from __future__ import annotations
 
@@ -115,3 +116,21 @@ def test_workers_import_installed_pyspark(spark):
         assert not archive.endswith(".jar"), archive
         for a in (archive, os.path.realpath(archive)):
             assert not any(a.startswith(h) for h in homes), archive
+
+
+def test_workers_fork_from_frozen_heap(spark):
+    """A Python task runs in a worker forked after the daemon froze its
+    heap (pandas and pyarrow included), so the collection after each
+    task walks only the objects made since the fork."""
+
+    def probe(batches):
+        import gc
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"frozen": [gc.get_freeze_count()]})
+
+    row = spark.range(1, numPartitions=1).mapInPandas(probe, "frozen long").collect()[0]
+    assert row["frozen"] > 0

@@ -29,10 +29,16 @@ class BM25Index:
     TERM_CACHE_MAX = 5_000_000
 
     def __init__(self, spark: SparkSession, root: str, cache_blocks: bool = False):
-        """``cache_blocks=True`` pins the blocks table in executor
-        memory — worth it for a long-lived serving session (measured:
-        50-query batch 6.1 s → 4.4 s warm at 1M docs), wasted for
-        one-shot jobs (first batch pays full materialization)."""
+        """``cache_blocks=True`` pins the blocks table and the doc_len
+        sidecar in executor memory for a long-lived serving session,
+        both hash-partitioned by salt into the same ``n = min(salts,
+        defaultParallelism)`` partitions and sorted within each by
+        (salt, term) and (salt, first_doc). That is the salt cogroup's
+        required distribution and ordering, so a request plans no
+        Exchange and no Sort: one Spark job of ``n`` tasks, nothing
+        shuffled. The first request pays the one shuffle that fills the
+        cache, so a one-shot job keeps the default: read the files and
+        let the cogroup shuffle its pruned slice (three jobs)."""
         self.spark = spark
         self.paths = IndexPaths.load(root)
         self.stats = self.paths.stats
@@ -40,13 +46,34 @@ class BM25Index:
         # compactions); partitioned dirs must be read per-root and
         # unioned (Spark refuses multi-root partition discovery)
         self._blocks = self._read_union(self.paths.blocks_paths())
-        if cache_blocks:
-            self._blocks = self._blocks.cache()
         self._doc_lens = self._read_union(self.paths.doc_lens_paths())
+        self._cached: list[DataFrame] = []
+        if cache_blocks:
+            # salt = doc_id // stride over ids below the high-watermark
+            next_id = int(self.stats.get("next_doc_id", self.stats["n_docs"]))
+            n_salts = -(-next_id // int(self.stats["stride"]))
+            n = max(1, min(n_salts, spark.sparkContext.defaultParallelism))
+            self._blocks = (
+                self._blocks.repartition(n, "salt")
+                .sortWithinPartitions("salt", "term")
+                .cache()
+            )
+            self._doc_lens = (
+                self._doc_lens.repartition(n, "salt")
+                .sortWithinPartitions("salt", "first_doc")
+                .cache()
+            )
+            self._cached = [self._blocks, self._doc_lens]
         self._bounds_exact = bool(self.stats.get("bounds_exact", True))
         self._term_dict = read_table(spark, self.paths.term_dict_path())
         self._term_cache: dict[str, tuple[int, float]] | None = None
         self._term_cache_tried = False
+
+    def release(self) -> None:
+        """Unpersist every table this handle cached."""
+        for df in self._cached:
+            df.unpersist()
+        self._cached = []
 
     def _read_union(self, paths: list[str]) -> DataFrame:
         dfs = [read_table(self.spark, p) for p in paths]

@@ -6,9 +6,11 @@ partition sizing).
 
 Python workers start from ``zensearch_spark.worker_daemon``, which drops
 the spark-core jar, and Spark's pyspark/py4j zips when the same pyspark
-is installed, from their ``sys.path``: every task's
-``importlib.invalidate_caches()`` re-reads each zip on the path, ~140 ms
-of CPU per task on Python 3.11.
+is installed, from their ``sys.path`` (every task's
+``importlib.invalidate_caches()`` re-reads each zip on the path), then
+imports pandas and pyarrow and freezes its heap before it forks any
+worker (else each new worker imports pandas on its first UDF, and the
+daemon's ``gc.collect()`` after every task walks all of them).
 """
 
 from __future__ import annotations
