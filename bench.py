@@ -287,13 +287,14 @@ def main() -> None:
     # deeper lists; its decode-skip counters are the standing
     # regression guard for the essential-phase evaluator.
     deep_root = os.path.join(scratch, f"zs_bench_idx_deep_{BENCH_N_CONVS}_{cores}")
-    if not os.path.exists(os.path.join(deep_root, "stats.json")):
-        build_index(
-            spark, corpus, deep_root,
-            corpus_id=f"bench-deep:n_convs={BENCH_N_CONVS}:seed=42",
-            n_salt_ranges=4,
-        )
-        log("[bench] deep-list index (4 salts) materialized")
+    # build_index skips every stage already committed with the same
+    # fingerprint, so a reused root only rebuilds what changed
+    build_index(
+        spark, corpus, deep_root,
+        corpus_id=f"bench-deep:n_convs={BENCH_N_CONVS}:seed=42",
+        n_salt_ranges=4,
+    )
+    log("[bench] deep-list index (4 salts) ready")
     deep_counters = {
         "blocks_total": spark.sparkContext.accumulator(0),
         "blocks_decoded": spark.sparkContext.accumulator(0),

@@ -27,7 +27,7 @@ answers go to stdout as one JSON object per line; all diagnostics on
 stderr. At 100 TB the shape is identical — the warm index handle holds
 only model-size state (term dictionary cache) on the driver plus the
 optionally-cached blocks and doc_len tables on executors; per-batch
-work stays the bucket-pruned WAND plan.
+work stays the term-pruned WAND plan.
 """
 
 from __future__ import annotations

@@ -93,7 +93,7 @@ stage = {stage!r}
 cores = {cores}
 reps = {reps}
 stats = json.load(open(os.path.join(tmp, "prep_idx", "stats.json")))
-stride, bs, ntb = stats["stride"], stats["block_size"], stats["n_term_buckets"]
+stride, bs = stats["stride"], stats["block_size"]
 avgdl = stats["avgdl"]
 prep = os.path.join(tmp, "prep_idx")
 out = os.path.join(tmp, f"out_{{stage}}_{{cores}}")
@@ -139,8 +139,7 @@ def one() -> dict:
     elif stage == "blocks":
         ib.stage_blocks(spark, os.path.join(prep, "postings"),
                         os.path.join(prep, "term_dict"), out,
-                        avgdl=avgdl, stride=stride, block_size=bs,
-                        n_term_buckets=ntb)
+                        avgdl=avgdl, stride=stride, block_size=bs)
     elif stage == "doc_lens":
         ib.stage_doc_lens(spark, os.path.join(prep, "doc_map"), out,
                           stride=stride)

@@ -4,8 +4,9 @@ The batch evaluator's pruning story has two layers; this job measures
 both on a real index instead of asserting them in prose:
 
 1. SCAN pruning — the pruned block scan's formatted plan carries
-   PartitionFilters on term_bucket and PushedFilters on term, so the
-   job reads only the query terms' posting bytes;
+   PushedFilters on term, and the blocks are flat parquet sorted by
+   term, so the scan skips every row group whose term min/max range
+   holds no query term;
 2. DECODE pruning — inside each salt group, the MaxScore evaluator
    decodes only blocks that can change the top-k; blocks delivered by
    the scan but never decoded were skipped by block-max bounds. The
@@ -15,7 +16,8 @@ both on a real index instead of asserting them in prose:
     python jobs/wand_pruning_stats.py [--index /dev/shm/zs_bench_idx_32]
         [--n-convs 12000] [--n-queries 50]
 
-Builds the index if missing; prints one JSON line and the plan excerpt.
+Builds the index (build_index skips every stage already committed with
+the same fingerprint); prints one JSON line and the plan excerpt.
 """
 
 from __future__ import annotations
@@ -50,7 +52,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from tests.oracle_bm25 import reference_query_set
-    from zensearch_spark.functions.spark_hash import term_bucket
     from zensearch_spark.plans.index_build import build_index
     from zensearch_spark.plans.query_plan import BM25Index
     from zensearch_spark.session import get_spark
@@ -61,11 +62,10 @@ def main() -> None:
     root = args.index or os.path.join(
         scratch, f"zs_pruning_idx_s{args.n_salt_ranges}"
     )
-    if not os.path.exists(os.path.join(root, "stats.json")):
-        corpus = generate_transcripts(spark, args.n_convs, seed=42)
-        build_index(spark, corpus, root,
-                    corpus_id=f"pruning:n_convs={args.n_convs}:seed=42",
-                    n_salt_ranges=args.n_salt_ranges)
+    corpus = generate_transcripts(spark, args.n_convs, seed=42)
+    build_index(spark, corpus, root,
+                corpus_id=f"pruning:n_convs={args.n_convs}:seed=42",
+                n_salt_ranges=args.n_salt_ranges)
     index = BM25Index(spark, root)
 
     qset = reference_query_set()[: args.n_queries]
@@ -79,12 +79,9 @@ def main() -> None:
     }
     df = index.topk_batch(batch, counters=counters)
     # topk_batch returns the merged rows as a local relation; explain
-    # the block scan it ran, under the same term_bucket/term predicate
+    # the block scan it ran, under the same term predicate
     terms = sorted(r["term"] for r in index.term_rows(*[q for _, q, _ in batch]))
-    buckets = sorted({term_bucket(t, int(index.stats["n_term_buckets"])) for t in terms})
-    scan = index._blocks.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-    )
+    scan = index._blocks.filter(F.col("term").isin(terms))
     plan = scan._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -109,16 +106,13 @@ def main() -> None:
     }
     # plan excerpt: the pruned block scan's filters
     for para in plan.split("\n\n"):
-        if "PartitionFilters" in para and "term_bucket" in para:
+        if any("PushedFilters" in ln and "term" in ln for ln in para.splitlines()):
             keep = [
                 ln.strip()
                 for ln in para.splitlines()
-                if any(
-                    k in ln
-                    for k in ("PartitionFilters", "PushedFilters", "ReadSchema")
-                )
+                if any(k in ln for k in ("PushedFilters", "ReadSchema"))
             ]
-            out["scan_plan"] = keep[:3]
+            out["scan_plan"] = keep[:2]
             break
     print(json.dumps(out))
     spark.stop()

@@ -5,6 +5,11 @@ import sys
 
 import pytest
 
+# row-group size for fixture indexes written by _small_row_groups: a few
+# hundred rows then span several row groups instead of one, so pruning
+# on the sort keys is visible at test scale
+BLOCK_BYTES = 64 << 10
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
@@ -22,3 +27,41 @@ def small_corpus_pdf():
     from zensearch_spark.sources.corpus import generate_transcripts_pandas
 
     return generate_transcripts_pandas(n_convs=200, seed=42)
+
+
+def _small_row_groups(spark, build):
+    """Run ``build`` with parquet row groups of ~BLOCK_BYTES."""
+    spark.conf.set("parquet.block.size", str(BLOCK_BYTES))
+    try:
+        build()
+    finally:
+        spark.conf.unset("parquet.block.size")
+
+
+def _pushed_filters(df) -> str:
+    """The PushedFilters line of the (single) parquet scan in df's plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = [ln for ln in plan.splitlines() if "PushedFilters:" in ln]
+    assert len(lines) == 1, plan
+    return lines[0].split("PushedFilters:", 1)[1].split(", ReadSchema:", 1)[0]
+
+
+def _row_group_stats(path: str, cols: list[str]) -> list[dict]:
+    """Per row group of every parquet file under ``path``, in file then
+    row-group order: {col: (min, max)}."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in sorted(glob.glob(f"{path}/*.parquet")):
+        md = pq.ParquetFile(f).metadata
+        names = [md.schema.column(i).name for i in range(md.num_columns)]
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            out.append({
+                c: (rg.column(names.index(c)).statistics.min,
+                    rg.column(names.index(c)).statistics.max)
+                for c in cols
+            })
+    return out

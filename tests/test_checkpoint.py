@@ -30,9 +30,9 @@ def _mtimes(root):
 
 def test_second_build_skips_all_stages(spark, corpus, tmp_path):
     root = str(tmp_path / "idx")
-    build_index(spark, corpus, root, corpus_id="c1", n_salt_ranges=4, n_term_buckets=4)
+    build_index(spark, corpus, root, corpus_id="c1", n_salt_ranges=4)
     before = _mtimes(root)
-    build_index(spark, corpus, root, corpus_id="c1", n_salt_ranges=4, n_term_buckets=4)
+    build_index(spark, corpus, root, corpus_id="c1", n_salt_ranges=4)
     assert _mtimes(root) == before, "no stage may re-run when committed"
 
 
@@ -41,7 +41,7 @@ def test_resume_after_crash_between_stages(spark, corpus, tmp_path):
     rerun rebuilds ONLY the missing tail, and manifests are
     byte-identical module wall-time (per-partition lineage equal)."""
     root = str(tmp_path / "idx")
-    build_index(spark, corpus, root, corpus_id="c1", n_salt_ranges=4, n_term_buckets=4)
+    build_index(spark, corpus, root, corpus_id="c1", n_salt_ranges=4)
     with open(os.path.join(root, "_manifests", "blocks.json")) as f:
         blocks_before = json.load(f)
     before = _mtimes(root)
@@ -49,7 +49,7 @@ def test_resume_after_crash_between_stages(spark, corpus, tmp_path):
     shutil.rmtree(os.path.join(root, "blocks"))
     os.remove(os.path.join(root, "_manifests", "blocks.json"))
     os.remove(os.path.join(root, "_manifests", "term_dict.json"))
-    build_index(spark, corpus, root, corpus_id="c1", n_salt_ranges=4, n_term_buckets=4)
+    build_index(spark, corpus, root, corpus_id="c1", n_salt_ranges=4)
     after = _mtimes(root)
     assert after["doc_map"] == before["doc_map"], "committed prefix untouched"
     assert after["postings"] == before["postings"]
@@ -73,11 +73,11 @@ def test_resume_after_crash_between_stages(spark, corpus, tmp_path):
 
 def test_fingerprint_change_rebuilds_downstream(spark, corpus, tmp_path):
     root = str(tmp_path / "idx")
-    build_index(spark, corpus, root, corpus_id="c1", n_salt_ranges=4, n_term_buckets=4)
+    build_index(spark, corpus, root, corpus_id="c1", n_salt_ranges=4)
     before = _mtimes(root)
     # changed block size → blocks stage re-runs, upstream skipped
     build_index(spark, corpus, root, corpus_id="c1", n_salt_ranges=4,
-                n_term_buckets=4, block_size=64)
+                block_size=64)
     after = _mtimes(root)
     assert after["doc_map"] == before["doc_map"]
     assert after["blocks"] > before["blocks"]

@@ -32,7 +32,7 @@ def compacted(spark, tmp_path_factory):
     corpus_a = spark.createDataFrame(_gen_convs(np.arange(N_A), seed=42))
     root = str(base / "idx")
     build_index(spark, corpus_a, root, corpus_id="compact-A",
-                n_salt_ranges=6, n_term_buckets=8)
+                n_salt_ranges=6)
 
     # stream corpus B into a landing dir, ingest, compact
     landing = str(base / "landing")
@@ -50,7 +50,7 @@ def compacted(spark, tmp_path_factory):
     root_full = str(base / "idx_full")
     corpus_ab = spark.createDataFrame(_gen_convs(np.arange(N_A + N_B), seed=42))
     build_index(spark, corpus_ab, root_full, corpus_id="compact-AB",
-                n_salt_ranges=6, n_term_buckets=8)
+                n_salt_ranges=6)
     return (
         BM25Index(spark, root),
         BM25Index(spark, root_full),
@@ -171,7 +171,7 @@ def test_two_generation_ids_disjoint(compacted, spark, tmp_path_factory):
         _gen_convs(np.arange(N_A + N_B + n_c), seed=42)
     )
     build_index(spark, corpus_all, root_full3, corpus_id="compact-ABC",
-                n_salt_ranges=6, n_term_buckets=8)
+                n_salt_ranges=6)
     full3 = BM25Index(spark, root_full3)
     for qid in QIDS[:3]:
         q = reference_query_set()[qid]
@@ -284,3 +284,51 @@ def test_fold_rejects_delta_overlapping_base(compacted, spark, tmp_path_factory)
         json.dump(st, f)
     with pytest.raises(RuntimeError, match="overlapping doc_len"):
         fold_deltas(spark, dst, max_segments=len(segs["blocks"]) - 1)
+
+
+def test_old_bucket_layout_refused_and_migrated(compacted, spark, tmp_path_factory):
+    """An index whose posting blocks are still in the retired
+    ``term_bucket=<b>/`` directory tree (its stats name n_term_buckets)
+    is refused loudly by every reader of the blocks — the error says to
+    rebuild — while major_compact, which reads only the doc_map,
+    rebuilds it into the flat layout with the same answers."""
+    import json
+    import os
+    import shutil
+
+    from zensearch_spark.plans.compaction import fold_deltas, major_compact
+
+    _inc, _full, root, landing, *_ = compacted
+    q = reference_query_set()[3]
+    want = _hydrated(BM25Index(spark, root), q["query_text"], q["k"])
+    assert want
+
+    old = str(tmp_path_factory.mktemp("old_layout") / "idx")
+    shutil.copytree(root, old)
+    stats_path = os.path.join(old, "stats.json")
+    st = json.load(open(stats_path))
+    for seg in st.get("segments", {}).get("blocks", ["blocks"]):
+        flat = os.path.join(old, seg)
+        tree = flat + "_tree"
+        (spark.read.parquet(flat)
+         .withColumn("term_bucket", F.pmod(F.hash("term"), F.lit(4)))
+         .write.partitionBy("term_bucket").parquet(tree))
+        shutil.rmtree(flat)
+        os.rename(tree, flat)
+    st["n_term_buckets"] = 4
+    with open(stats_path, "w") as f:
+        json.dump(st, f)
+
+    for open_blocks in (
+        lambda: BM25Index(spark, old),
+        lambda: compact_index(spark, old, landing),
+        lambda: fold_deltas(spark, old, max_segments=0),
+    ):
+        with pytest.raises(ValueError, match="term_bucket .*rebuild"):
+            open_blocks()
+
+    migrated = str(tmp_path_factory.mktemp("migrated") / "idx")
+    major_compact(spark, old, migrated, corpus_id="old-layout-migrated")
+    mi = BM25Index(spark, migrated)
+    assert "n_term_buckets" not in mi.stats
+    assert _hydrated(mi, q["query_text"], q["k"]) == want

@@ -9,23 +9,27 @@ import uuid
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from tests.conftest import _pushed_filters, _row_group_stats, _small_row_groups
 from tests.oracle_bm25 import OracleIndex, reference_query_set
-from zensearch_spark.plans.index_build import build_index
+from zensearch_spark.plans.index_build import build_index, write_blocks
 from zensearch_spark.plans.query_plan import BM25Index
 
 
 @pytest.fixture(scope="module")
 def built(spark, small_corpus_pdf, tmp_path_factory):
+    """The small index, written with small parquet row groups so that
+    every query below also runs over a blocks table of many row groups."""
     root = str(tmp_path_factory.mktemp("idx"))
     corpus = spark.createDataFrame(small_corpus_pdf)
-    paths = build_index(
+    _small_row_groups(spark, lambda: build_index(
         spark, corpus, root, corpus_id="small-corpus-seed42-n200",
-        n_salt_ranges=6, n_term_buckets=8,
-    )
+        n_salt_ranges=6,
+    ))
     index = BM25Index(spark, root)
     doc_map = (
-        spark.read.parquet(paths.doc_map)
+        spark.read.parquet(index.paths.doc_map)
         .select("doc_id", "conv_id", "turn_idx", "text")
         .toPandas()
         .sort_values("doc_id")
@@ -79,6 +83,93 @@ def test_blocks_reconstruct_postings(built):
         got_tf = dict(zip(docs.tolist(), tfs.tolist()))
         for pos, tf in want.items():
             assert got_tf[oracle.doc_ids[pos]] == tf
+
+
+def test_blocks_written_with_one_shuffle(built, monkeypatch):
+    """The blocks writer shuffles the postings once: the encode's
+    partitioning is also the file split, and the dictionary join-back
+    is a broadcast that leaves the encoded rows in place."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    index, *_ = built
+    spark, st = index.spark, index.stats
+    plans = []
+
+    def capture(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    write_blocks(
+        spark.read.parquet(index.paths.postings),
+        spark.read.parquet(index.paths.term_dict),
+        "unwritten", avgdl=st["avgdl"], stride=st["stride"],
+        block_size=st["block_size"],
+    )
+    assert len(plans) == 1
+    shuffles = [
+        ln for ln in plans[0].splitlines()
+        if "Exchange" in ln and "BroadcastExchange" not in ln
+    ]
+    assert len(shuffles) == 1, plans[0]
+
+
+def test_blocks_shuffle_join_above_broadcast_bound(built, monkeypatch, tmp_path):
+    """A dictionary larger than BROADCAST_TERMS_MAX is joined by shuffle,
+    not broadcast: the blocks hold the same rows, and each file is still
+    sorted by (term, salt, block_seq). The planner's own size-based
+    broadcast is switched off, since the test dictionary is small."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from zensearch_spark.plans import index_build
+
+    index, *_ = built
+    spark, st = index.spark, index.stats
+    monkeypatch.setattr(index_build, "BROADCAST_TERMS_MAX", 0)
+    plans, write = [], DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    out = str(tmp_path / "blocks")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        write_blocks(
+            spark.read.parquet(index.paths.postings),
+            spark.read.parquet(index.paths.term_dict),
+            out, avgdl=st["avgdl"], stride=st["stride"],
+            block_size=st["block_size"],
+        )
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert len(plans) == 1
+    assert "Broadcast" not in plans[0], plans[0]
+    got, want = spark.read.parquet(out), spark.read.parquet(index.paths.blocks)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    keys = ["term", "salt", "block_seq"]
+    for f in (tmp_path / "blocks").glob("*.parquet"):
+        pdf = pd.read_parquet(f, columns=keys)
+        assert pdf.equals(pdf.sort_values(keys, ignore_index=True)), f
+
+
+def test_one_term_scan_prunes_row_groups(built):
+    """Blocks are flat parquet sorted by (term, salt, block_seq): across
+    the files, in order, row-group term ranges ascend, so a one-term
+    scan pushes ``term`` to parquet and its min/max statistics rule out
+    every row group but the one or two that can hold the term."""
+    index, oracle, *_ = built
+    groups = _row_group_stats(index.paths.blocks, ["term"])
+    assert len(groups) > 8
+    assert all(a["term"][1] <= b["term"][0] for a, b in zip(groups, groups[1:]))
+    rare = min(oracle.postings, key=lambda t: len(oracle.postings[t]))
+    hot = max(oracle.postings, key=lambda t: len(oracle.postings[t]))
+    for term, most in ((rare, 2), (hot, len(groups) - 1)):
+        scan = index._blocks.filter(F.col("term").isin([term]))
+        assert "term" in _pushed_filters(scan)
+        matched = [g for g in groups if g["term"][0] <= term <= g["term"][1]]
+        assert 0 < len(matched) <= most, (term, len(matched), len(groups))
 
 
 def test_hot_term_salted_across_groups(built):
@@ -263,6 +354,31 @@ def test_release_unpersists_both_tables(built, spark):
     assert all(t.storageLevel.useMemory for t in tables)
     handle.release()
     assert not any(t.storageLevel.useMemory for t in tables)
+
+
+@pytest.mark.parametrize("request_kind, problem", [
+    ("repeated_id", "query_id 1 appears more than once"),
+    ("k_zero", "k must be >= 1"),
+    ("k_negative", "k must be >= 1"),
+])
+def test_bad_request_raises_before_any_job(built, spark, request_kind, problem):
+    """A request the evaluator would merge wrongly (two queries sharing
+    an id) or fail on inside a Python worker (k < 1) is refused on the
+    driver with a ValueError naming the problem, before any Spark job."""
+    index, *_ = built
+    texts = [q["query_text"] for q in reference_query_set()[:2]]
+    call = {
+        "repeated_id": lambda: index.topk_batch([(1, texts[0], 10), (1, texts[1], 10)]),
+        "k_zero": lambda: index.topk(texts[0], 0),
+        "k_negative": lambda: index.topk_batch([(0, texts[0], 10), (1, texts[1], -1)]),
+    }[request_kind]
+
+    def refused():
+        with pytest.raises(ValueError, match=problem):
+            call()
+
+    _, jobs = _jobs_run(spark, refused)
+    assert jobs == 0
 
 
 def test_unknown_terms_empty_without_jobs(built, spark):

@@ -20,47 +20,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import _pushed_filters, _row_group_stats, _small_row_groups
+
 SF_DIR = "/root/testdata/sf0.01"
 DIM = 64
-# row-group size for the fixture indexes: 500 clustered vectors then
-# span ~17 row groups (sketch) instead of one
-BLOCK_BYTES = 64 << 10
-
-
-def _small_row_groups(spark, build):
-    spark.conf.set("parquet.block.size", str(BLOCK_BYTES))
-    try:
-        build()
-    finally:
-        spark.conf.unset("parquet.block.size")
-
-
-def _pushed_filters(df) -> str:
-    """The PushedFilters line of the (single) parquet scan in df's plan."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    lines = [ln for ln in plan.splitlines() if "PushedFilters:" in ln]
-    assert len(lines) == 1, plan
-    return lines[0].split("PushedFilters:", 1)[1].split(", ReadSchema:", 1)[0]
-
-
-def _row_group_stats(path: str, cols: list[str]) -> list[dict]:
-    """Per row group of every parquet file under ``path``: {col: (min, max)}."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            out.append({
-                c: (rg.column(names.index(c)).statistics.min,
-                    rg.column(names.index(c)).statistics.max)
-                for c in cols
-            })
-    return out
 
 
 @pytest.fixture(scope="module")

@@ -56,27 +56,14 @@ def read_table(spark: SparkSession, ident: str) -> DataFrame:
     return spark.read.parquet(ident)
 
 
-def write_table(
-    df: DataFrame,
-    ident: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
+def write_table(df: DataFrame, ident: str, mode: str = "overwrite") -> None:
     """Write a DataFrame to `ident` (same routing as read_table)."""
     if is_table_ident(ident):
         _require_catalog(df.sparkSession, ident)
-        name = ident[len(_TABLE_PREFIX):]
-        w = df.writeTo(name)
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            w = w.partitionedBy(*[F.col(c) for c in partition_by])
+        w = df.writeTo(ident[len(_TABLE_PREFIX):])
         if mode == "append":
             w.append()
         else:
             w.createOrReplace()
         return
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(ident)
+    df.write.mode(mode).parquet(ident)

@@ -43,7 +43,6 @@ from pyspark.sql import types as T
 
 from zensearch_spark import B, K1
 from zensearch_spark.functions.codec import decode_block
-from zensearch_spark.functions.spark_hash import term_bucket
 from zensearch_spark.functions.tokenizer import tokenize_query
 
 EPS = 1e-9
@@ -415,6 +414,20 @@ def _merge_topk(cands: pa.Table, k_of: dict[int, int]) -> pa.Table:
     return cands.take(order[rank < limit])
 
 
+def check_queries(queries: list[tuple[int, str, int]]) -> None:
+    """Reject a request the evaluator would answer wrongly or fail on
+    inside a Python worker: query ids must be unique (the merge keys
+    each query's k by id, so two queries sharing an id would be merged
+    into one answer) and every k must be at least 1."""
+    seen: set = set()
+    for qid, _text, k in queries:
+        if qid in seen:
+            raise ValueError(f"query_id {qid!r} appears more than once in the request")
+        seen.add(qid)
+        if k < 1:
+            raise ValueError(f"query_id {qid!r}: k must be >= 1, got {k!r}")
+
+
 def wand_topk_batch(
     spark: SparkSession,
     blocks: DataFrame,
@@ -422,7 +435,6 @@ def wand_topk_batch(
     term_rows: list[dict],
     queries: list[tuple[int, str, int]],
     avgdl: float,
-    n_term_buckets: int,
     bounds_exact: bool = True,
     counters: dict | None = None,
 ) -> DataFrame:
@@ -430,7 +442,7 @@ def wand_topk_batch(
     salt cogroup's Spark jobs run inside this call and the result is a
     local relation, so collecting it runs no further job.
 
-    ``queries``: [(query_id, query_text, k)].
+    ``queries``: [(query_id, query_text, k)], valid per check_queries.
     ``term_rows``: collected term_dict rows covering the union of all
     query terms (the broadcast dictionary).
     ``doc_lens``: the per-salt doc_len sidecar table, cogrouped with
@@ -451,11 +463,7 @@ def wand_topk_batch(
     if not parsed:
         return spark.createDataFrame(pa.Table.from_pandas(_NO_ROWS), TOPK_SCHEMA)
 
-    terms = sorted(all_terms)
-    buckets = sorted({term_bucket(t, n_term_buckets) for t in terms})
-    pruned = blocks.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-    )
+    pruned = blocks.filter(F.col("term").isin(sorted(all_terms)))
 
     def run(bl_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(bl_pdf):  # dl-only salt group (no query-term blocks)
@@ -472,24 +480,3 @@ def wand_topk_batch(
     )
     k_of = {qid: k for qid, _, k in parsed}
     return spark.createDataFrame(_merge_topk(cands.toArrow(), k_of), TOPK_SCHEMA)
-
-
-def wand_topk(
-    spark: SparkSession,
-    blocks: DataFrame,
-    doc_lens: DataFrame,
-    term_rows: list[dict],
-    query: str,
-    k: int,
-    avgdl: float,
-    n_term_buckets: int,
-    bounds_exact: bool = True,
-) -> DataFrame:
-    """Single-query convenience wrapper over the batch evaluator."""
-    batch = wand_topk_batch(
-        spark, blocks, doc_lens, term_rows, [(0, query, k)], avgdl,
-        n_term_buckets, bounds_exact,
-    )
-    return batch.select("doc_id", "score")
-
-

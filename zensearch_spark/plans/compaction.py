@@ -59,9 +59,10 @@ from pyspark.sql import functions as F
 from zensearch_spark.functions.tokenizer import with_tokens
 from zensearch_spark.operators.docmap import assign_doc_ids, unpersist_intermediates
 from zensearch_spark.plans.index_build import (
-    DL_SCHEMA,
     IndexPaths,
-    encode_blocks_from_postings,
+    with_term_ids,
+    write_blocks,
+    write_doc_lens,
 )
 from zensearch_spark.sources.corpus import TRANSCRIPT_SCHEMA
 
@@ -85,7 +86,6 @@ def compact_index(
     st = dict(paths.stats)
     stride = int(st["stride"])
     block_size = int(st["block_size"])
-    n_term_buckets = int(st["n_term_buckets"])
     n_old = int(st["n_docs"])
     # id high-watermark: one past the largest doc_id ever issued.
     # Pre-watermark indexes (single-generation) have dense 0..n-1 ids,
@@ -174,72 +174,26 @@ def compact_index(
     delta_df = new_postings.groupBy("term").agg(F.count("*").alias("df"))
     td_name = f"term_dict_g{gen:03d}"
     td_dir = os.path.join(index_root, td_name)
-    (
+    # fresh term_ids each rewrite — the id is an intra-job encode key
+    # (blocks store term STRINGS), so re-assignment is safe
+    with_term_ids(
         old_td.unionByName(delta_df)
         .groupBy("term")
         .agg(F.sum("df").alias("df"))
         .withColumn("idf", F.log(F.lit(float(n_total)) / F.col("df")))
-        # fresh term_ids each rewrite — the id is an intra-job encode
-        # key (blocks store term STRINGS), so re-assignment is safe
-        .withColumn("term_id", F.monotonically_increasing_id())
-        .write.mode("overwrite")
-        .parquet(td_dir)
-    )
+    ).write.mode("overwrite").parquet(td_dir)
     new_td = spark.read.parquet(td_dir)
 
     # ---- 4. posting blocks for the new docs (encoded with NEW stats) --------
-    nparts = spark.sparkContext.defaultParallelism * 2
     bl_dir = os.path.join(index_root, f"blocks_delta_{gen:03d}")
-    (
-        encode_blocks_from_postings(
-            new_postings, new_td, avgdl=avgdl, stride=stride,
-            block_size=block_size, n_term_buckets=n_term_buckets,
-            nparts=nparts,
-        )
-        .repartition(n_term_buckets, "term_bucket")
-        .sortWithinPartitions("term", "salt", "block_seq")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(bl_dir)
+    write_blocks(
+        new_postings, new_td, bl_dir,
+        avgdl=avgdl, stride=stride, block_size=block_size,
     )
 
     # ---- 5. doc_len sidecar rows for the new ranges --------------------------
-    import pandas as pd
-
-    def encode_dl(batches):
-        from zensearch_spark.functions.codec import encode_dl_chunks
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for salt, grp in pdf.groupby("salt", sort=True):
-                for r in encode_dl_chunks(
-                    grp["doc_id"].to_numpy(), grp["doc_len"].to_numpy()
-                ):
-                    out.append(
-                        {
-                            "salt": int(salt),
-                            "first_doc": r["first_doc"],
-                            "n": r["n"],
-                            "dl_bytes": r["dl_bytes"],
-                        }
-                    )
-            if out:
-                yield pd.DataFrame(out)
-
     dl_dir = os.path.join(index_root, f"doc_lens_delta_{gen:03d}")
-    (
-        new_dm.select(
-            "doc_id", "doc_len",
-            (F.col("doc_id") / F.lit(stride)).cast("int").alias("salt"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "salt")
-        .sortWithinPartitions("salt", "doc_id")
-        .mapInPandas(encode_dl, schema=DL_SCHEMA)
-        .write.mode("overwrite")
-        .parquet(dl_dir)
-    )
+    write_doc_lens(new_dm, dl_dir, stride)
 
     # ---- 6. commit: atomic stats swap ----------------------------------------
     segs = st.get(
@@ -293,7 +247,6 @@ def fold_deltas(
     n_deltas = len(segs["blocks"]) - 1
     stride = int(st["stride"])
     block_size = int(st["block_size"])
-    n_term_buckets = int(st["n_term_buckets"])
     avgdl = float(st["avgdl"])
     fold_gen = int(st.get("fold_generation", 0)) + 1
     tag = f"fold_{fold_gen:03d}"
@@ -315,17 +268,9 @@ def fold_deltas(
     )
     term_dict = spark.read.parquet(paths.term_dict_path())
     bl_dir = os.path.join(index_root, f"blocks_{tag}")
-    (
-        encode_blocks_from_postings(
-            postings, term_dict, avgdl=avgdl, stride=stride,
-            block_size=block_size, n_term_buckets=n_term_buckets,
-            nparts=spark.sparkContext.defaultParallelism * 2,
-        )
-        .repartition(n_term_buckets, "term_bucket")
-        .sortWithinPartitions("term", "salt", "block_seq")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(bl_dir)
+    write_blocks(
+        postings, term_dict, bl_dir,
+        avgdl=avgdl, stride=stride, block_size=block_size,
     )
 
     # 3. doc_len sidecar chunks pass through unchanged (already
@@ -392,10 +337,12 @@ def major_compact(
     """
     from zensearch_spark.plans.index_build import build_index
 
-    paths = IndexPaths.load(index_root)
+    # not IndexPaths.load: this reads only the doc_map, so an index in
+    # a retired blocks layout is migrated here rather than refused
+    with open(os.path.join(index_root, "stats.json")) as f:
+        paths = IndexPaths(root=index_root, stats=json.load(f))
     dm = spark.read.parquet(*paths.doc_map_paths())
     cols = [f.name for f in TRANSCRIPT_SCHEMA.fields if f.name in dm.columns]
     return build_index(
-        spark, dm.select(*cols), out_root, corpus_id=corpus_id, force=True,
-        n_term_buckets=int(paths.stats["n_term_buckets"]),
+        spark, dm.select(*cols), out_root, corpus_id=corpus_id, force=True
     )

@@ -19,8 +19,9 @@ Stages (each checkpoint-resumable via plans/checkpoint.py):
                    union of block rows, ordered by (salt, block_seq)).
                    Blocks are 128-doc delta+varint frames with exact
                    per-block max-score (functions/codec.py), written
-                   partitionBy(term_bucket) so query-term lookups
-                   prune files.
+                   as flat parquet sorted by (term, salt, block_seq):
+                   the per-row-group min/max on term is what lets a
+                   query-term lookup skip row groups (write_blocks).
 
 Scale notes: no collect() touches corpus-sized data; the only
 driver-side values are n_docs/avgdl/stride. groupBy(term, doc_id)
@@ -38,7 +39,7 @@ import os
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -149,8 +150,19 @@ class IndexPaths:
 
     @classmethod
     def load(cls, root: str) -> "IndexPaths":
+        """Open the index at ``root``. An index whose blocks are still in
+        the retired ``term_bucket=`` directory tree (its stats carry
+        ``n_term_buckets``) is refused."""
         with open(os.path.join(root, "stats.json")) as f:
-            return cls(root=root, stats=json.load(f))
+            stats = json.load(f)
+        if "n_term_buckets" in stats:
+            raise ValueError(
+                f"index {root!r} stores posting blocks in the old "
+                "term_bucket directory layout, which this version no "
+                "longer reads; rebuild it (build_index, or major_compact "
+                "to rebuild from its own doc_map)"
+            )
+        return cls(root=root, stats=stats)
 
 
 def _encode_sorted_pdf(pdf: pd.DataFrame, avgdl: float, block_size: int) -> pd.DataFrame:
@@ -221,44 +233,140 @@ def _make_partition_encoder(avgdl: float, block_size: int):
     return encode_partition
 
 
-def encode_blocks_from_postings(
+def with_term_ids(term_dict: DataFrame) -> DataFrame:
+    """Add ``term_id`` = the number of postings of every term before
+    this one in term order (a prefix sum of df). It is unique (df ≥ 1),
+    increases with the term, and [term_id, term_id + df) is the term's
+    slice of the term-sorted posting list — the coordinate write_blocks
+    cuts into equal file ranges. A plain function of the dictionary, so
+    a rebuild assigns the same ids. The dictionary's aggregate stays
+    parallel; only the window's prefix sum runs in one task, after an
+    exchange of one row per term."""
+    return term_dict.withColumn(
+        "term_id",
+        (F.sum("df").over(Window.orderBy("term")) - F.col("df")).cast("long"),
+    )
+
+
+# above this many terms write_blocks leaves both dictionary joins to
+# the planner (a shuffle join for a dictionary this size) instead of
+# broadcasting the dictionary: a broadcast is collected on the driver
+# and held whole by every executor, twice here (keyed by term and by
+# term_id). Measured on 4 cores with an 8 GB driver and 10-byte terms,
+# one broadcast of 2,000,000 terms is 256 MiB built in 0.85 s; of
+# 4,000,000 terms, 448 MiB built in 2.0 s.
+BROADCAST_TERMS_MAX = 2_000_000
+
+
+def write_blocks(
     postings: DataFrame,
     term_dict: DataFrame,
+    path: str,
     avgdl: float,
     stride: int,
     block_size: int,
-    n_term_buckets: int,
-    nparts: int,
-) -> DataFrame:
-    """Shared blocks-encode plan (full build + delta compaction):
-    minimal-width Arrow boundary (term_id/salt/doc_id/tf/doc_len —
-    no strings, no idf), whole-partition NumPy encode, then term
-    string + idf joined back onto the ~1/128-sized block rows and
-    max_score computed JVM-side."""
+) -> None:
+    """Encode ``postings`` into posting blocks and write them to
+    ``path`` as flat parquet sorted by (term, salt, block_seq) — the
+    one writer of the blocks table (full build, delta compaction and
+    fold). ``term_dict`` carries the term_ids of with_term_ids.
+
+    One shuffle: each (term_id, salt) group goes whole to the task
+    that owns its slice of the term-sorted posting list, cut into
+    ``nparts`` equal slices by posting count; a term whose postings
+    span several slices (a Zipf-head term) spreads its salts across
+    those tasks. The Arrow boundary stays minimal (term_id/salt/
+    doc_id/tf/doc_len — no strings, no idf); the term string and idf
+    are joined back onto the ~1/128-sized block rows through a
+    broadcast of the dictionary, which keeps the encoded rows in place
+    and in order, and max_score is computed JVM-side. Each task writes
+    one file covering one term range, so the row-group min/max on term
+    prunes a query-term scan. A dictionary of more than
+    BROADCAST_TERMS_MAX terms is joined by shuffle instead; each file
+    is then re-sorted by term and covers a hash slice of the terms."""
+    spark = postings.sparkSession
+    nparts = spark.sparkContext.defaultParallelism * 2
+    # one task over the (vocabulary-sized) dictionary, no exchange: one job
+    n_terms, total = term_dict.coalesce(1).agg(F.count("*"), F.sum("df")).first()
+    total = max(total or 0, 1)
+    terms = term_dict.select("term", "term_id", "df", "idf")
+    broadcast = n_terms <= BROADCAST_TERMS_MAX
+    if broadcast:
+        terms = F.broadcast(terms)
+    # the first and last of the nparts posting-list slices the term spans
+    lo = (F.col("term_id") * nparts / total).cast("int")
+    hi = ((F.col("term_id") + F.col("df") - 1) * nparts / total).cast("int")
     enc_in = (
-        postings.join(term_dict.select("term", "term_id"), "term")
+        postings.join(terms, "term")
         .select(
             "term_id",
             (F.col("doc_id") / F.lit(stride)).cast("int").alias("salt"),
             "doc_id",
             F.col("tf").cast("int").alias("tf"),
             F.col("doc_len").cast("int").alias("doc_len"),
+            lo.alias("lo"),
+            hi.alias("hi"),
         )
-        .repartition(nparts, "term_id", "salt")
+        .repartitionById(
+            nparts, F.col("lo") + F.col("salt") % (F.col("hi") - F.col("lo") + 1)
+        )
         .sortWithinPartitions("term_id", "salt", "doc_id")
+        .drop("lo", "hi")
     )
     encoded = enc_in.mapInPandas(
         _make_partition_encoder(avgdl, block_size), schema=BLOCK_ENC_SCHEMA
     )
-    return (
-        encoded.join(term_dict.select("term_id", "term", "idf"), "term_id")
+    blocks = (
+        encoded.join(terms, "term_id")
         .withColumn("max_score", F.col("idf") * F.col("max_tfcomp"))
         .select(
             "term", "salt", "block_seq", "n", "first_doc", "last_doc",
             "max_score", "max_tf", "min_dl", "doc_bytes", "tf_bytes",
         )
-        .withColumn("term_bucket", F.pmod(F.hash("term"), F.lit(n_term_buckets)))
     )
+    if not broadcast:
+        blocks = blocks.sortWithinPartitions("term", "salt", "block_seq")
+    write_table(blocks, path)
+
+
+def _encode_doc_lens(batches):
+    """mapInPandas body of the doc_len sidecar: rows arrive sorted by
+    (salt, doc_id) within the partition; an Arrow batch boundary can
+    split a salt run, but any contiguous slice of a dense sorted run is
+    itself dense, so per-batch chunking stays valid (positional decode
+    only needs each CHUNK's first_doc)."""
+    from zensearch_spark.functions.codec import encode_dl_chunks
+
+    for pdf in batches:
+        out = [
+            {"salt": int(salt), **row}
+            for salt, grp in pdf.groupby("salt", sort=True)
+            for row in encode_dl_chunks(
+                grp["doc_id"].to_numpy(), grp["doc_len"].to_numpy()
+            )
+        ]
+        if out:
+            yield pd.DataFrame(out)
+
+
+def write_doc_lens(doc_map: DataFrame, path: str, stride: int) -> None:
+    """Write the doc_len sidecar of ``doc_map``'s docs to ``path``: one
+    length per DOC per salt range, instead of one per POSTING (round 1
+    stored dl_bytes in every block, repeating a doc's length once per
+    term it contains — 3.2x corpus bytes). doc_ids are dense per salt
+    range, so the sidecar needs no doc stream at all: chunked varint
+    dls, positional lookup. Shared by the full build and compaction."""
+    enc_df = (
+        doc_map.select(
+            "doc_id",
+            "doc_len",
+            (F.col("doc_id") / F.lit(stride)).cast("int").alias("salt"),
+        )
+        .repartition(doc_map.sparkSession.sparkContext.defaultParallelism, "salt")
+        .sortWithinPartitions("salt", "doc_id")
+        .mapInPandas(_encode_doc_lens, schema=DL_SCHEMA)
+    )
+    write_table(enc_df, path)
 
 
 def _table_id_stats(
@@ -376,16 +484,10 @@ def stage_term_dict(
     ).collect()[0]
     n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
     postings = read_table(spark, postings_path)
-    term_dict = (
+    term_dict = with_term_ids(
         postings.groupBy("term")
         .agg(F.count("*").alias("df"))
         .withColumn("idf", F.log(F.lit(float(n_docs)) / F.col("df")))
-        # term_id: the dictionary-encoded join key the block encoder
-        # ships across the Arrow boundary instead of the term string.
-        # Only uniqueness matters (it never leaves this build), so
-        # monotonically_increasing_id is fine — the written values are
-        # what every later join sees.
-        .withColumn("term_id", F.monotonically_increasing_id())
     )
     write_table(term_dict, out_path)
     return {
@@ -403,84 +505,21 @@ def stage_blocks(
     avgdl: float,
     stride: int,
     block_size: int,
-    n_term_buckets: int,
 ) -> None:
-    """Salted repartition → whole-partition block encode → one-writer-
-    per-bucket partitioned write (see build_index docstring for the
-    skew/scale rationale)."""
-    postings = read_table(spark, postings_path)
-    term_dict = read_table(spark, term_dict_path)
-    nparts = spark.sparkContext.defaultParallelism * 2
-    # hot-term skew handled inside: the encode shuffle key includes
-    # the doc-range salt, so the Zipf head spreads across tasks
-    out = encode_blocks_from_postings(
-        postings, term_dict, avgdl=avgdl, stride=stride,
-        block_size=block_size, n_term_buckets=n_term_buckets, nparts=nparts,
-    )
-    # One shuffle of the (already compressed, small) block rows so
-    # each write task owns exactly one bucket: without this, every
-    # encode task opens a parquet/zstd writer per bucket it sees —
-    # writers × tasks explodes with parallelism (measured 2x
-    # anti-scaling 8→32 cores). Sorting by (term, salt, block_seq)
-    # inside the bucket gives the file tight per-row-group term
-    # min/max stats, so query-term filters prune row groups inside
-    # the bucket dir as well.
-    write_table(
-        out.repartition(n_term_buckets, "term_bucket")
-        .sortWithinPartitions("term", "salt", "block_seq"),
-        out_path,
-        partition_by=["term_bucket"],
+    """Salted posting-slice partitioning → whole-partition block encode
+    → flat term-sorted write (write_blocks; see the module docstring
+    for the skew/scale rationale)."""
+    write_blocks(
+        read_table(spark, postings_path), read_table(spark, term_dict_path),
+        out_path, avgdl=avgdl, stride=stride, block_size=block_size,
     )
 
 
 def stage_doc_lens(
     spark: SparkSession, doc_map_path: str, out_path: str, stride: int
 ) -> None:
-    """doc_len sidecar: one length per DOC per salt range, instead of
-    one per POSTING (round 1 stored dl_bytes in every block, repeating
-    a doc's length once per term it contains — 3.2x corpus bytes).
-    doc_ids are dense ranks, so the sidecar needs no doc stream at
-    all: chunked varint dls, positional lookup."""
-    doc_map = read_table(spark, doc_map_path)
-
-    def encode_dl(batches):
-        from zensearch_spark.functions.codec import encode_dl_chunks
-
-        # rows arrive sorted by (salt, doc_id) within the partition;
-        # an Arrow batch boundary can split a salt run, but any
-        # contiguous slice of a dense sorted run is itself dense,
-        # so per-batch chunking stays valid (positional decode
-        # only needs each CHUNK's first_doc).
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for salt, grp in pdf.groupby("salt", sort=True):
-                for row in encode_dl_chunks(
-                    grp["doc_id"].to_numpy(), grp["doc_len"].to_numpy()
-                ):
-                    out.append(
-                        {
-                            "salt": int(salt),
-                            "first_doc": row["first_doc"],
-                            "n": row["n"],
-                            "dl_bytes": row["dl_bytes"],
-                        }
-                    )
-            if out:
-                yield pd.DataFrame(out)
-
-    enc_df = (
-        doc_map.select(
-            "doc_id",
-            "doc_len",
-            (F.col("doc_id") / F.lit(stride)).cast("int").alias("salt"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "salt")
-        .sortWithinPartitions("salt", "doc_id")
-        .mapInPandas(encode_dl, schema=DL_SCHEMA)
-    )
-    write_table(enc_df, out_path)
+    """doc_len sidecar of the whole doc_map (write_doc_lens)."""
+    write_doc_lens(read_table(spark, doc_map_path), out_path, stride)
 
 
 def build_index(
@@ -490,7 +529,6 @@ def build_index(
     corpus_id: str,
     block_size: int = BLOCK_SIZE,
     n_salt_ranges: int | None = None,
-    n_term_buckets: int = 16,
     force: bool = False,
 ) -> IndexPaths:
     """Build the full index under ``out_root``. ``corpus_id`` is the
@@ -515,7 +553,8 @@ def build_index(
 
     r3 = runner.run(
         "term_dict",
-        {"upstream": runner.upstream_hash("postings"), "op": "df+idf", "v": 2},
+        # v3: term_id = term-order posting offset (with_term_ids)
+        {"upstream": runner.upstream_hash("postings"), "op": "df+idf", "v": 3},
         lambda tmp: stage_term_dict(spark, r1.output_path, r2.output_path, tmp),
         force=force,
     )
@@ -537,13 +576,13 @@ def build_index(
             "upstream": [runner.upstream_hash("postings"), runner.upstream_hash("term_dict")],
             "block_size": block_size,
             "stride": stride,
-            "n_term_buckets": n_term_buckets,
-            "v": 2,  # v2: doc_len sidecar + (max_tf, min_dl) bound columns
+            # v2: doc_len sidecar + (max_tf, min_dl) bound columns;
+            # v3: flat term-sorted files (write_blocks)
+            "v": 3,
         },
         lambda tmp: stage_blocks(
             spark, r2.output_path, r3.output_path, tmp,
             avgdl=avgdl, stride=stride, block_size=block_size,
-            n_term_buckets=n_term_buckets,
         ) or {"stride": stride, "n_salt_ranges": n_salt_ranges},
         force=force,
     )
@@ -569,7 +608,6 @@ def build_index(
         "total_len": total_len,
         "stride": stride,
         "block_size": block_size,
-        "n_term_buckets": n_term_buckets,
         "corpus_id": corpus_id,
         # True ⇒ every block's stored max_score was computed with the
         # CURRENT stats/idf (full build). Delta compaction flips this

@@ -3,10 +3,11 @@ block-max top-k → hydration (SURVEY.md §3 "ours" lifecycle).
 
 The reference ships the ENTIRE corpus to the scorer on every query
 (reference: database/src/database.ts:93-104 + the RabbitMQ hops in
-§3); here a query touches only the term_dict rows and block files of
-its own terms (partition pruning on term_bucket, row-group pruning on
-term), then ≤ salt_groups·k candidate rows move to the driver-side
-final top-k.
+§3); here a query touches only the term_dict rows and the block row
+groups of its own terms (the blocks are flat parquet sorted by term,
+so the pushed ``term IN (...)`` filter skips row groups by their
+min/max statistics), then ≤ salt_groups·k candidate rows move to the
+driver-side final top-k.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from pyspark.sql import functions as F
 
 from zensearch_spark.catalog import read_table
 from zensearch_spark.functions.tokenizer import tokenize_query
-from zensearch_spark.operators.wand import wand_topk, wand_topk_batch
+from zensearch_spark.operators.wand import check_queries, wand_topk_batch
 from zensearch_spark.plans.index_build import IndexPaths
 
 
@@ -43,10 +44,9 @@ class BM25Index:
         self.paths = IndexPaths.load(root)
         self.stats = self.paths.stats
         # each table may span several segments (base build + delta
-        # compactions); partitioned dirs must be read per-root and
-        # unioned (Spark refuses multi-root partition discovery)
-        self._blocks = self._read_union(self.paths.blocks_paths())
-        self._doc_lens = self._read_union(self.paths.doc_lens_paths())
+        # compactions), all flat parquet dirs read as one table
+        self._blocks = spark.read.parquet(*self.paths.blocks_paths())
+        self._doc_lens = spark.read.parquet(*self.paths.doc_lens_paths())
         self._cached: list[DataFrame] = []
         if cache_blocks:
             # salt = doc_id // stride over ids below the high-watermark
@@ -74,13 +74,6 @@ class BM25Index:
         for df in self._cached:
             df.unpersist()
         self._cached = []
-
-    def _read_union(self, paths: list[str]) -> DataFrame:
-        dfs = [read_table(self.spark, p) for p in paths]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
 
     def _load_term_cache(self) -> dict[str, tuple[int, float]] | None:
         if self._term_cache_tried:
@@ -127,17 +120,7 @@ class BM25Index:
 
     def topk(self, query: str, k: int) -> DataFrame:
         """(doc_id, score) — block-max pruned exact top-k."""
-        return wand_topk(
-            self.spark,
-            self._blocks,
-            self._doc_lens,
-            self.term_rows(query),
-            query,
-            k,
-            avgdl=float(self.stats["avgdl"]),
-            n_term_buckets=int(self.stats["n_term_buckets"]),
-            bounds_exact=self._bounds_exact,
-        )
+        return self.topk_batch([(0, query, k)]).select("doc_id", "score")
 
     def topk_batch(
         self, queries: list[tuple[int, str, int]], counters: dict | None = None
@@ -147,7 +130,9 @@ class BM25Index:
         queries within each salt group). Eager: the Spark work runs in
         this call and the result is a local relation. ``counters``:
         optional {"blocks_total", "blocks_decoded"} Spark accumulators
-        for block-skipping evidence."""
+        for block-skipping evidence. A repeated query_id or a k below 1
+        raises ValueError before any Spark job runs."""
+        check_queries(queries)
         return wand_topk_batch(
             self.spark,
             self._blocks,
@@ -155,7 +140,6 @@ class BM25Index:
             self.term_rows(*[q for _, q, _ in queries]),
             queries,
             avgdl=float(self.stats["avgdl"]),
-            n_term_buckets=int(self.stats["n_term_buckets"]),
             bounds_exact=self._bounds_exact,
             counters=counters,
         )
@@ -175,7 +159,7 @@ class BM25Index:
         from pyspark.sql import Window
 
         top = self.topk(query, k)
-        doc_map = self._read_union(self.paths.doc_map_paths()).select(
+        doc_map = self.spark.read.parquet(*self.paths.doc_map_paths()).select(
             "doc_id", "conv_id", "turn_idx"
         )
         w = Window.partitionBy("conv_id").orderBy(
@@ -197,7 +181,7 @@ class BM25Index:
         index.ts:186-197), but truly top-k (the reference renders the
         full corpus ranking; its .slice(0,10) is commented out)."""
         top = self.topk(query, k)
-        doc_map = self._read_union(self.paths.doc_map_paths())
+        doc_map = self.spark.read.parquet(*self.paths.doc_map_paths())
         hydrate_cols = [c for c in ("conv_id", "turn_idx", "role", "text", "tool", "ts")
                         if c in doc_map.columns]
         return (
@@ -211,7 +195,7 @@ class BM25Index:
         from zensearch_spark.functions.tokenizer import with_tokens
         from zensearch_spark.operators.naive_scorer import naive_topk
 
-        doc_map = self._read_union(self.paths.doc_map_paths())
+        doc_map = self.spark.read.parquet(*self.paths.doc_map_paths())
         docs = doc_map.select(
             "doc_id", with_tokens("text").alias("tokens"), "doc_len"
         )
