@@ -6,9 +6,8 @@ Runs the headline workload and prints ONE JSON line:
 
 Methodology (round-5 judge item 1 — the round-4 artifact was a
 single-shot measurement taken inside a degraded host phase and
-recorded a 13× phantom regression): every entry is now measured with
-the probe-bracketed min-of-N cell pattern jobs/stage_scaling.py
-pioneered —
+recorded a 13× phantom regression): every entry is measured with a
+probe-bracketed min-of-N cell —
 
 - a fixed-work single-thread CPU probe runs before and after every
   entry; the rolling baseline is the minimum probe ever seen, and an
@@ -18,8 +17,8 @@ pioneered —
   minimum wall wins (identical runs swing 3-7× when the hypervisor
   starves vCPUs; the minimum is the only robust statistic here);
 - after the battery, every attempt's phase_clean tag is re-derived
-  against the campaign-global minimum probe (retroactive re-tag —
-  a run that STARTS degraded must not optimistically tag itself);
+  against the run-global minimum probe (retroactive re-tag — a run
+  that STARTS degraded must not optimistically tag itself);
 - per entry the JSON carries {"min", "all", "clean", "probes"} in
   "details", while "queries" keeps the flat name→min mapping the
   driver's BENCH_r{N}.json comparison reads.
@@ -39,9 +38,8 @@ Workload:
      the WAND essential-phase evaluator (round-4 judge item 6).
 
 All progress goes to stderr; stdout carries exactly one JSON line.
-A cooperative dev-lock (ZS_DEV_LOCK) is held while the bench runs so
-a background scaling campaign never pollutes (or is polluted by)
-these cells.
+Per-stage and per-operator breakdowns are perfbench's job
+(perfbench/README.md); this file reports the end-to-end numbers.
 """
 
 from __future__ import annotations
@@ -55,14 +53,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from jobs.stage_scaling import DEV_LOCK, PHASE_FACTOR, PhaseState  # noqa: E402
-
 BENCH_N_CONVS = int(os.environ.get("ZS_BENCH_N_CONVS", "12000"))
 BENCH_N_QUERIES = int(os.environ.get("ZS_BENCH_N_QUERIES", "12"))
 REPS = int(os.environ.get("ZS_BENCH_REPS", "2"))
 RETRIES = int(os.environ.get("ZS_BENCH_RETRIES", "2"))
 BACKOFF_SEC = float(os.environ.get("ZS_BENCH_BACKOFF_SEC", "20"))
 DEADLINE_MIN = float(os.environ.get("ZS_BENCH_DEADLINE_MIN", "40"))
+
+# host-phase guard: a probe slower than PHASE_FACTOR× the fastest one
+# seen marks its bracket as taken in a degraded window
+PHASE_FACTOR = 2.0
 
 
 def log(msg: str) -> None:
@@ -71,6 +71,46 @@ def log(msg: str) -> None:
 
 def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def cpu_probe() -> float:
+    """Fixed single-thread work (~0.5 s in a clean window): sort-heavy
+    NumPy so it exercises memory bandwidth, the resource the degraded
+    phases starve. Wall time of THIS is the phase detector."""
+    import numpy as np
+
+    t0 = time.monotonic()
+    a = np.random.default_rng(0).standard_normal(2_000_000)
+    for _ in range(10):
+        a = np.sort(a)[::-1].copy()
+    return time.monotonic() - t0
+
+
+class PhaseState:
+    """Rolling clean-window baseline = min probe ever observed.
+
+    The rolling base drives RETRY decisions only; Meter.finalize
+    re-derives every clean tag against the final global-min probe."""
+
+    def __init__(self):
+        self.base = min(cpu_probe() for _ in range(3))
+
+    def check(self, settle_sec: float = 0.0) -> tuple[float, bool]:
+        """min-of-2 probes (true phases last minutes; a single probe
+        can catch a transient). ``settle_sec`` sleeps first — the
+        post-entry check needs it because teardown and page reclaim
+        right after Spark work inflate a probe for a few seconds."""
+        if settle_sec:
+            time.sleep(settle_sec)
+        p = cpu_probe()
+        self.base = min(self.base, p)
+        if p <= PHASE_FACTOR * self.base:
+            return p, True
+        time.sleep(2.0)
+        p2 = cpu_probe()
+        self.base = min(self.base, p2)
+        p = min(p, p2)
+        return p, p <= PHASE_FACTOR * self.base
 
 
 class Meter:
@@ -158,15 +198,6 @@ def main() -> None:
     from zensearch_spark.sources.corpus import generate_transcripts
 
     cores, _ = default_sizing()
-
-    # hold the dev lock: a concurrent scaling campaign pauses instead
-    # of fighting this bench for the host (both would lose)
-    try:
-        with open(DEV_LOCK, "w") as f:
-            f.write(f"bench pid={os.getpid()}\n")
-    except OSError:
-        pass
-
     spark = get_spark(app="zensearch-bench", cores=cores)
     meter = Meter()
     timings: dict[str, float] = {}
@@ -344,10 +375,6 @@ def main() -> None:
         },
     }
     spark.stop()
-    try:
-        os.unlink(DEV_LOCK)
-    except OSError:
-        pass
     print(json.dumps(out))
 
 

@@ -1,6 +1,6 @@
 """Generate a LARGE synthetic corpus mimicking the driver testdata's
-shape, for round-6 scale timing only (noop-sink measurements in
-bench_extra.py). NOT oracle data: correctness gates always run on the
+shape, for scale timing only (bench.py with SPARK_GRAFT_SF_DIR pointed
+at the output). NOT oracle data: correctness gates always run on the
 original testdata dirs, which this script only reads (``--src``).
 
 The driver's bonus-round measurement used a driver-generated sf1.0

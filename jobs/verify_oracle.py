@@ -47,18 +47,8 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
-    from jobs.stage_scaling import DEV_LOCK
     from zensearch_spark.caching import release
     from zensearch_spark.session import get_spark
-
-    try:
-        with open(DEV_LOCK, "w") as f:
-            f.write(f"verify_oracle pid={os.getpid()}\n")
-    except OSError:
-        pass
-    import atexit
-
-    atexit.register(lambda: os.path.exists(DEV_LOCK) and os.unlink(DEV_LOCK))
 
     con = duckdb.connect()
     for t in TABLES:

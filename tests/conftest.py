@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -36,6 +37,20 @@ def _small_row_groups(spark, build):
         build()
     finally:
         spark.conf.unset("parquet.block.size")
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs started while it ran). The job group
+    is unique per call: pytest may import this module a second time
+    under another name, and a reused group id counts the old jobs."""
+    sc = spark.sparkContext
+    gid = f"zs-test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
 def _pushed_filters(df) -> str:

@@ -1,9 +1,9 @@
 """Unit tests for the bench measurement methodology (round-5 judge
-item 1): the probe-bracketed min-of-N Meter in bench.py and the
-retroactive re-tagging in jobs/stage_scaling.py. These are the pieces
-that decide which numbers a BENCH_r{N}.json reports, so they get the
-same deterministic coverage as any operator — no Spark, no probes:
-PhaseState is stubbed so every branch is exercised on fixed inputs.
+item 1): the probe-bracketed min-of-N Meter in bench.py and its
+retroactive re-tagging. These are the pieces that decide which numbers
+a BENCH_r{N}.json reports, so they get the same deterministic coverage
+as any operator — no Spark, no probes: PhaseState is stubbed so every
+branch is exercised on fixed inputs.
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
-from jobs.stage_scaling import PHASE_FACTOR, retag_attempts
+from bench import PHASE_FACTOR
 
 
 class _FixedPhase:
@@ -86,15 +86,3 @@ def test_finalize_retags_against_final_baseline(monkeypatch):
     assert out["early"]["clean"] is False  # retro-retagged: 1.8 > 2*0.3
     assert out["late"]["clean"] is True
 
-
-def test_retag_attempts_rederives_every_tag():
-    cells = {
-        ("s", 8): [
-            {"probe_pre": 0.4, "probe_post": 0.5, "phase_clean": True},
-            {"probe_pre": 1.2, "probe_post": 0.4, "phase_clean": True},
-            {"probe_pre": None, "probe_post": None, "phase_clean": True},
-        ]
-    }
-    retag_attempts(cells, final_base=0.3)
-    tags = [r["phase_clean"] for r in cells[("s", 8)]]
-    assert tags == [True, False, False]  # 1.2 > 2*0.3; None never clean

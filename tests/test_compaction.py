@@ -15,8 +15,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import _jobs_run
 from tests.oracle_bm25 import reference_query_set
-from tests.test_index_and_wand import _jobs_run
 from zensearch_spark.plans.compaction import compact_index
 from zensearch_spark.plans.index_build import build_index
 from zensearch_spark.plans.query_plan import BM25Index

@@ -4,14 +4,12 @@ set — SURVEY.md §5.2 layers 1, 2, 4."""
 
 from __future__ import annotations
 
-import uuid
-
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import _pushed_filters, _row_group_stats, _small_row_groups
+from tests.conftest import _jobs_run, _pushed_filters, _row_group_stats, _small_row_groups
 from tests.oracle_bm25 import OracleIndex, reference_query_set
 from zensearch_spark.plans.index_build import build_index, write_blocks
 from zensearch_spark.plans.query_plan import BM25Index
@@ -190,20 +188,6 @@ def cached(built):
     handle = BM25Index(index.spark, index.paths.root, cache_blocks=True)
     yield handle
     handle.release()
-
-
-def _jobs_run(spark, fn):
-    """(fn(), number of Spark jobs started while it ran). The job group
-    is unique per call: pytest may import this module a second time
-    under another name, and a reused group id counts the old jobs."""
-    sc = spark.sparkContext
-    gid = f"zs-test-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(gid, gid)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
 def _rank_identical(got, want):

@@ -1,10 +1,12 @@
 """get_spark's default sizing comes from the host, not a fixed box, and
 its Python workers start without Spark's archives on their path, with
-pandas and pyarrow loaded and frozen out of the per-task collection."""
+pandas and pyarrow loaded and frozen out of the per-task collection, and
+its status data is readable with the web UI off."""
 
 from __future__ import annotations
 
 import os
+import uuid
 import zipfile
 
 import pytest
@@ -134,3 +136,23 @@ def test_workers_fork_from_frozen_heap(spark):
 
     row = spark.range(1, numPartitions=1).mapInPandas(probe, "frozen long").collect()[0]
     assert row["frozen"] > 0
+
+
+def test_status_data_without_ui(spark):
+    """The web UI is off, and the status data a harness reads is there
+    anyway: a job group's jobs, their stages and each stage's tasks come
+    from statusTracker(), which needs no UI."""
+    sc = spark.sparkContext
+    assert sc.uiWebUrl is None
+    gid = f"zs-test-status-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        spark.range(100, numPartitions=2).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(gid)
+    assert len(jobs) == 1
+    stages = tracker.getJobInfo(jobs[0]).stageIds
+    assert len(stages) == 1
+    assert tracker.getStageInfo(stages[0]).numTasks == 2

@@ -20,7 +20,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import _pushed_filters, _row_group_stats, _small_row_groups
+from tests.conftest import _jobs_run, _pushed_filters, _row_group_stats, _small_row_groups
 
 SF_DIR = "/root/testdata/sf0.01"
 DIM = 64
@@ -317,6 +317,44 @@ def test_batch_matches_single_probes(spark, clustered, clustered_sketch):
             for r in ann_topk_indexed(spark, clustered_sketch, q, k=k).collect()
         ]
         assert batch.get(vid, []) == single, vid
+
+
+@pytest.mark.parametrize("operator, request_kind, problem", [
+    ("ann", "repeated_id", "query_id 1 appears more than once"),
+    ("ann", "k_zero", "k must be >= 1"),
+    ("ann", "k_negative", "k must be >= 1"),
+    ("cosine", "repeated_id", "query_id 1 appears more than once"),
+    ("cosine", "k_zero", "k must be >= 1"),
+])
+def test_bad_vector_batch_raises_before_any_job(
+    spark, clustered, clustered_sketch, operator, request_kind, problem
+):
+    """A vector batch whose queries share an id (their candidates would
+    be merged into one answer) or whose k is below 1 is refused on the
+    driver with a ValueError naming the problem, before any Spark job —
+    the same check the text batch makes."""
+    from zensearch_spark.operators.similarity import ann_topk_batch, cosine_topk_batch
+
+    q1, q2 = _qvec(clustered, 0), _qvec(clustered, 1)
+    call = {
+        ("ann", "repeated_id"):
+            lambda: ann_topk_batch(spark, clustered_sketch, [(1, q1, 3), (1, q2, 3)]),
+        ("ann", "k_zero"):
+            lambda: ann_topk_batch(spark, clustered_sketch, [(0, q1, 3), (1, q2, 0)]),
+        ("ann", "k_negative"):
+            lambda: ann_topk_batch(spark, clustered_sketch, [(0, q1, -1)]),
+        ("cosine", "repeated_id"):
+            lambda: cosine_topk_batch(clustered, [(1, q1), (1, q2)], k=3),
+        ("cosine", "k_zero"):
+            lambda: cosine_topk_batch(clustered, [(0, q1), (1, q2)], k=0),
+    }[(operator, request_kind)]
+
+    def refused():
+        with pytest.raises(ValueError, match=problem):
+            call()
+
+    _, jobs = _jobs_run(spark, refused)
+    assert jobs == 0
 
 
 def test_indexed_matches_numpy_ann(spark, clustered, clustered_sketch):

@@ -22,7 +22,7 @@ would swap md5 for xxhash64 — same plans, cheaper hashing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData
 from pyspark.sql import functions as F
 
 # 2-universal MinHash modulus (Mersenne prime 2^31-1): (gk % P) and the
@@ -109,6 +109,32 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
+def _verify_jaccard(
+    shared: GroupedData, size_a: str, size_b: str, threshold: float
+) -> DataFrame:
+    """The exact-Jaccard verify both near-dup operators end in.
+
+    ``shared`` holds one row per gram two docs share, grouped by
+    (doc_a, doc_b); ``size_a``/``size_b`` name each side's gram-set
+    size. Returns (doc_a, doc_b, jaccard) for pairs with
+    |A∩B| / (|A| + |B| − |A∩B|), rounded to 6 dp, ≥ threshold."""
+    return (
+        shared.agg(
+            F.count("*").alias("inter"),
+            F.first(size_a).alias("size_a"),
+            F.first(size_b).alias("size_b"),
+        )
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")), 6
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame, n: int = 5, threshold: float = 0.8,
     id_col: str = "doc_id", text_col: str = "text",
@@ -169,24 +195,10 @@ def ngram_jaccard_pairs(
         sz = kept.groupBy("doc").agg(F.count("*").alias("set_size"))
         eg = kept.join(sz, "doc")
     a, b = eg.alias("a"), eg.alias("b")
-    pairs = (
+    pairs = _verify_jaccard(
         a.join(b, (F.col("a.gk") == F.col("b.gk")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(
-            F.count("*").alias("inter"),
-            F.first("a.set_size").alias("size_a"),
-            F.first("b.set_size").alias("size_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b")),
+        "a.set_size", "b.set_size", threshold,
     )
     if pinned is not None:
         from zensearch_spark.caching import pin
@@ -282,28 +294,13 @@ def minhash_lsh_pairs(
     gb = egs.select(
         F.col("doc").alias("doc_b"), "gk", F.col("set_size").alias("size_b")
     )
-    inter = (
-        cand.join(ga, "doc_a")
-        .join(gb, ["doc_b", "gk"])
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count("*").alias("inter"),
-            F.first("size_a").alias("size_a"),
-            F.first("size_b").alias("size_b"),
-        )
-    )
     from zensearch_spark.caching import pin
 
     return pin(
-        inter
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard"),
+        _verify_jaccard(
+            cand.join(ga, "doc_a").join(gb, ["doc_b", "gk"]).groupBy("doc_a", "doc_b"),
+            "size_a", "size_b", threshold,
+        ),
         arr,
     )
 

@@ -576,6 +576,9 @@ def ann_topk_batch(
     """
     from pyspark.sql import Window
 
+    from zensearch_spark.operators.wand import check_queries
+
+    check_queries(queries)
     probe_rows: list[tuple[int, int, int]] = []
     by_table: dict[int, set[int]] = {t: set() for t in range(n_tables)}
     qrows = []
@@ -638,6 +641,9 @@ def cosine_topk_batch(
     boundary once, queries never cross at all."""
     from pyspark.sql import Window
 
+    from zensearch_spark.operators.wand import check_queries
+
+    check_queries([(qid, vec, k) for qid, vec in queries])
     qids = np.asarray([int(q) for q, _ in queries], dtype=np.int32)
     qm = np.stack(
         [np.asarray(v, dtype=np.float64) for _, v in queries]

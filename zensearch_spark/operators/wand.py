@@ -414,13 +414,15 @@ def _merge_topk(cands: pa.Table, k_of: dict[int, int]) -> pa.Table:
     return cands.take(order[rank < limit])
 
 
-def check_queries(queries: list[tuple[int, str, int]]) -> None:
-    """Reject a request the evaluator would answer wrongly or fail on
-    inside a Python worker: query ids must be unique (the merge keys
-    each query's k by id, so two queries sharing an id would be merged
-    into one answer) and every k must be at least 1."""
+def check_queries(queries: list[tuple[int, object, int]]) -> None:
+    """Reject a (query_id, query, k) request a batch top-k operator
+    would answer wrongly or fail on inside a Python worker: query ids
+    must be unique (each query's top k is keyed by id, so two queries
+    sharing an id would be merged into one answer) and every k must be
+    at least 1. The text and vector batches alike call it before any
+    Spark job."""
     seen: set = set()
-    for qid, _text, k in queries:
+    for qid, _query, k in queries:
         if qid in seen:
             raise ValueError(f"query_id {qid!r} appears more than once in the request")
         seen.add(qid)

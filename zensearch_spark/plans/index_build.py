@@ -394,10 +394,9 @@ def _table_id_stats(
 
 
 # --------------------------------------------------------------- stages
-# Each stage is a standalone function over explicit input/output paths
-# so (a) build_index composes them under checkpoint manifests and
-# (b) jobs/stage_scaling.py times each one in ISOLATION at two
-# parallelism levels for the north_rule scaling evidence.
+# Each stage is a standalone function over explicit input/output paths,
+# so build_index composes them under checkpoint manifests and a resumed
+# build re-runs only the stages whose manifest is missing or stale.
 
 # above this the id map goes through a shuffle join instead of a
 # driver broadcast: collecting + re-broadcasting the map is SERIAL

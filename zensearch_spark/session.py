@@ -158,15 +158,12 @@ def get_spark(
         # distributed dense-id invariant check (plans/index_build.py
         # _table_id_stats) metadata-only at any scale
         .config("spark.sql.parquet.aggregatePushDown", "true")
-        # UI off by default (driver overhead); SPARK_GRAFT_UI=1 turns it
-        # on for harnesses that read the /api/v1 status endpoints —
-        # jobs/stage_scaling.py derives executor task-time efficiency
-        # from completed-stage metrics (round-4 judge item 2). Port 0 =
-        # ephemeral, so parallel sessions never collide; retainedStages
-        # raised so totals-deltas never lose evicted stages mid-cell.
-        .config("spark.ui.enabled",
-                "true" if os.environ.get("SPARK_GRAFT_UI") else "false")
-        .config("spark.ui.port", "0")
+        # No web UI (driver overhead). Status data does not need it:
+        # statusTracker() and the status store behind it (which
+        # perfbench reads per stage and per operator) run with the UI
+        # off. retainedStages is read by that store's listener, so it
+        # still bounds how many finished stages a long run can query.
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.retainedStages", "4000")
         # Cap GC threads: the JVM defaults to ~23 parallel GC threads at
         # 32 CPUs, and GC+task thread oversubscription inside this VM
