@@ -284,12 +284,20 @@ def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_fingerprints(_tp(spark, sf_dir, "documents"), bits=32)
 
 
+def _qvecs(emb: DataFrame, ids: list[int]) -> dict[int, list[float]]:
+    """{vec_id: embedding} of the ``ids`` rows of ``emb``: the query
+    vectors of the vector entries, collected once per entry."""
+    return {
+        int(r["vec_id"]): [float(x) for x in r["embedding"]]
+        for r in emb.filter(F.col("vec_id").isin(ids)).collect()
+    }
+
+
 def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zensearch_spark.operators.similarity import cosine_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    return cosine_topk(emb, qvec, k=20)
+    return cosine_topk(emb, _qvecs(emb, [0])[0], k=20)
 
 
 def _source_fingerprint(path: str) -> str:
@@ -317,63 +325,58 @@ def _source_fingerprint(path: str) -> str:
 _INDEX_LAYOUT = "sorted"
 
 
-def ensure_ann_index(spark: SparkSession, sf_dir: str) -> tuple[str, list[float]]:
+def _index_cache(sf_dir: str, prefix: str) -> str:
+    """Cache directory of the ``prefix`` index built from ``sf_dir``'s
+    embeddings. The key holds the data dir, a source-content
+    fingerprint and the index layout, so a changed embeddings table or
+    layout rebuilds instead of reusing a stale index. Copies of older
+    fingerprints of the same data dir are evicted — every regeneration
+    otherwise leaks a full copy into tmpfs RAM (ADVICE r3)."""
+    import glob
+    import shutil
+
+    scratch = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+    tag = sf_dir.strip("/").replace("/", "_")
+    fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
+    path = os.path.join(scratch, f"{prefix}_{tag}_{fp}_{_INDEX_LAYOUT}")
+    for old in glob.glob(os.path.join(scratch, f"{prefix}_{tag}_*")):
+        if os.path.abspath(old) != os.path.abspath(path):
+            shutil.rmtree(old, ignore_errors=True)
+    return path
+
+
+def ensure_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the persisted multi-table ANN sketch for
-    ``sf_dir``'s embeddings; returns (index_path, query_vec of vec 0).
-    Cache key includes a source-content fingerprint and the index
-    layout, so a changed embeddings table or layout rebuilds instead
-    of reusing a stale index.
+    ``sf_dir``'s embeddings (cached by _index_cache); returns its path.
+    A reused sketch costs no Spark job.
     Called UNTIMED by bench.py prep — the sketch build is one-time
     index construction, not per-query work (judge round-2 item 1)."""
     from zensearch_spark.operators.similarity import build_ann_index
 
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    scratch = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    tag = sf_dir.strip("/").replace("/", "_")
-    fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-    idx_path = os.path.join(scratch, f"zs_ann_sketch_mt4_{tag}_{fp}_{_INDEX_LAYOUT}")
-    # evict sketches of OLDER fingerprints of this same sf_dir — every
-    # regeneration otherwise leaks a full sketch copy into tmpfs RAM
-    # (ADVICE r3)
-    import glob as _glob
-    import shutil as _shutil
-
-    for old in _glob.glob(os.path.join(scratch, f"zs_ann_sketch_mt4_{tag}_*")):
-        if os.path.abspath(old) != os.path.abspath(idx_path):
-            _shutil.rmtree(old, ignore_errors=True)
+    idx_path = _index_cache(sf_dir, "zs_ann_sketch_mt4")
     if not os.path.exists(os.path.join(idx_path, "_SUCCESS")):
-        build_ann_index(emb, idx_path, dim=len(qvec), n_planes=8, n_tables=4)
-    return idx_path, qvec
+        emb = _t(spark, sf_dir, "embeddings")
+        dim = len(_qvecs(emb, [0])[0])
+        build_ann_index(emb, idx_path, dim=dim, n_planes=8, n_tables=4)
+    return idx_path
 
 
 def ensure_ivf_index(spark: SparkSession, sf_dir: str):
     """Build (or reuse) the IVF cell index + centroids for sf_dir's
-    embeddings (same cache discipline as ensure_ann_index: content
-    fingerprint + layout key, stale dirs evicted, build untimed in
-    bench)."""
+    embeddings (cached by _index_cache, build untimed in bench);
+    returns (cells path, centroids)."""
     import numpy as np
 
     from zensearch_spark.operators.ivf import build_ivf_index, train_ivf_centroids
 
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    scratch = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    tag = sf_dir.strip("/").replace("/", "_")
-    fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-    idx_path = os.path.join(scratch, f"zs_ivf_{tag}_{fp}_{_INDEX_LAYOUT}")
-    import glob as _glob
-    import shutil as _shutil
-
-    for old in _glob.glob(os.path.join(scratch, f"zs_ivf_{tag}_*")):
-        if os.path.abspath(old) != os.path.abspath(idx_path):
-            _shutil.rmtree(old, ignore_errors=True)
+    idx_path = _index_cache(sf_dir, "zs_ivf")
     cent_path = os.path.join(idx_path, "centroids.npy")
     if not os.path.exists(os.path.join(idx_path, "cells", "_SUCCESS")):
+        emb = _t(spark, sf_dir, "embeddings")
         cent = train_ivf_centroids(emb, n_centroids=64, sample_every=4, seed=42)
         build_ivf_index(emb, os.path.join(idx_path, "cells"), cent)
         np.save(cent_path, cent)
-    return os.path.join(idx_path, "cells"), np.load(cent_path), qvec
+    return os.path.join(idx_path, "cells"), np.load(cent_path)
 
 
 def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,7 +387,8 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sorted cells, exact re-rank inside.
     from zensearch_spark.operators.ivf import ivf_topk
 
-    cells, cent, qvec = ensure_ivf_index(spark, sf_dir)
+    cells, cent = ensure_ivf_index(spark, sf_dir)
+    qvec = _qvecs(_t(spark, sf_dir, "embeddings"), [0])[0]
     return ivf_topk(spark, cells, cent, qvec, k=20, nprobe=8)
 
 
@@ -395,7 +399,8 @@ def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket, vec_id), probes read only their buckets' row groups.
     from zensearch_spark.operators.similarity import ann_topk_indexed
 
-    idx_path, qvec = ensure_ann_index(spark, sf_dir)
+    idx_path = ensure_ann_index(spark, sf_dir)
+    qvec = _qvecs(_t(spark, sf_dir, "embeddings"), [0])[0]
     return ann_topk_indexed(
         spark, idx_path, qvec, k=20, n_planes=8, n_tables=4, probe_hamming=1
     )
@@ -403,16 +408,12 @@ def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ann_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle-checked since round 5 (_ann_topk_batch_sql). The
-    # throughput shape: 8 probe queries share one Spark job and one
-    # bucket-pruned scan (vector twin of wand_topk_batch).
+    # throughput shape: 8 probe queries share one bucket-pruned scan
+    # and one re-rank job (vector twin of wand_topk_batch).
     from zensearch_spark.operators.similarity import ann_topk_batch
 
-    idx_path, _ = ensure_ann_index(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings")
-    qvecs = {
-        int(r["vec_id"]): [float(x) for x in r["embedding"]]
-        for r in emb.filter(F.col("vec_id") < 8).collect()
-    }
+    idx_path = ensure_ann_index(spark, sf_dir)
+    qvecs = _qvecs(_t(spark, sf_dir, "embeddings"), list(range(8)))
     queries = [(qid, vec, 10) for qid, vec in sorted(qvecs.items())]
     return ann_topk_batch(
         spark, idx_path, queries, n_planes=8, n_tables=4, probe_hamming=1
@@ -428,6 +429,23 @@ RECALL_QIDS = [0, 7, 42, 99, 123]
 RECALL_K = 10
 
 
+def _recall(spark: SparkSession, approx: DataFrame, exact: DataFrame) -> DataFrame:
+    """(query_id, k, n_hits, recall) per RECALL_QIDS query: how many of
+    the exact top-k rows the approximate top-k found. Computed on the
+    driver from the two eager results' rows — collecting a local
+    relation runs no Spark job."""
+    from collections import Counter
+
+    found = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
+    hits = Counter(
+        r["query_id"] for r in exact.collect() if (r["query_id"], r["vec_id"]) in found
+    )
+    return spark.createDataFrame(
+        [(q, RECALL_K, hits[q], round(hits[q] / RECALL_K, 6)) for q in RECALL_QIDS],
+        "query_id int, k int, n_hits long, recall double",
+    )
+
+
 def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recall@k of the multi-table sketch probe vs the exact brute-force
     # top-k, per query: (query_id, k, n_hits, recall). Both sides are
@@ -441,95 +459,41 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_topk_batch,
     )
 
-    idx_path, _ = ensure_ann_index(spark, sf_dir)
+    idx_path = ensure_ann_index(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
-    qvecs = {
-        int(r["vec_id"]): [float(x) for x in r["embedding"]]
-        for r in emb.filter(F.col("vec_id").isin(RECALL_QIDS)).collect()
-    }
+    qvecs = _qvecs(emb, RECALL_QIDS)
     ann = ann_topk_batch(
         spark, idx_path, [(q, qvecs[q], RECALL_K) for q in RECALL_QIDS],
         n_planes=8, n_tables=4, probe_hamming=1,
-    ).select("query_id", "vec_id")
-    exact = cosine_topk_batch(
-        emb, [(q, qvecs[q]) for q in RECALL_QIDS], k=RECALL_K
-    ).select("query_id", "vec_id")
-    hits = ann.join(exact, ["query_id", "vec_id"]).groupBy("query_id").agg(
-        F.count("*").alias("_n")
     )
-    base = spark.createDataFrame([(q,) for q in RECALL_QIDS], "query_id int")
-    n = F.coalesce(F.col("_n"), F.lit(0))
-    return base.join(hits, "query_id", "left").select(
-        "query_id",
-        F.lit(RECALL_K).alias("k"),
-        n.cast("long").alias("n_hits"),
-        F.round(n / F.lit(float(RECALL_K)), 6).alias("recall"),
-    )
+    exact = cosine_topk_batch(emb, [(q, qvecs[q]) for q in RECALL_QIDS], k=RECALL_K)
+    return _recall(spark, ann, exact)
 
 
 def _q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # IVF twin of ann_recall, through the SAME assignment / cell-
-    # pruning / exact-re-rank machinery as ivf_topk but with
-    # modular-mean centroids (ivf.modular_mean_centroids) — a model
-    # fit an external SQL engine reproduces exactly, so the oracle
-    # recomputes centroids, assignment argmax, the nprobe probe set,
-    # the re-rank AND the brute-force top-k independently. The k-means
-    # fit stays the production path (ivf_topk, pytest recall gates).
-    from pyspark.sql import Window
-
+    # IVF twin of ann_recall, through the SAME probe and exact re-rank
+    # (ivf_topk_batch) as ivf_topk but over modular-mean centroids
+    # (ivf.modular_mean_centroids) — a model fit an external SQL
+    # engine reproduces exactly, so the oracle recomputes centroids,
+    # assignment argmax, the nprobe probe set, the re-rank AND the
+    # brute-force top-k independently. The k-means fit stays the
+    # production path (ivf_topk, pytest recall gates).
     from zensearch_spark.operators.ivf import (
         assign_centroids,
+        ivf_topk_batch,
         modular_mean_centroids,
-        probe_cells,
     )
-    from zensearch_spark.operators.similarity import (
-        _cosine_pair,
-        cosine_topk_batch,
-    )
+    from zensearch_spark.operators.similarity import cosine_topk_batch
 
-    n_cells, nprobe = 16, 4
     emb = _t(spark, sf_dir, "embeddings")
-    cent = modular_mean_centroids(emb, n_cells=n_cells)
-    qvecs = {
-        int(r["vec_id"]): [float(x) for x in r["embedding"]]
-        for r in emb.filter(F.col("vec_id").isin(RECALL_QIDS)).collect()
-    }
-    probe_rows = [
-        (q, int(c))
-        for q in RECALL_QIDS
-        for c in probe_cells(cent, qvecs[q], nprobe=nprobe)
-    ]
-    probes = spark.createDataFrame(probe_rows, "query_id int, cell int")
-    qdf = spark.createDataFrame(
-        [(q, qvecs[q]) for q in RECALL_QIDS], "query_id int, qvec array<double>"
+    cent = modular_mean_centroids(emb, n_cells=16)
+    qvecs = _qvecs(emb, RECALL_QIDS)
+    ivf = ivf_topk_batch(
+        spark, assign_centroids(emb, cent), cent,
+        [(q, qvecs[q], RECALL_K) for q in RECALL_QIDS], nprobe=4,
     )
-    cand = (
-        assign_centroids(emb, cent)
-        .join(F.broadcast(probes), F.col("centroid_id") == F.col("cell"))
-        .join(F.broadcast(qdf), "query_id")
-    )
-    raw = _cosine_pair(F.col("embedding"), F.col("qvec"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("_raw"), F.asc("vec_id"))
-    ivf = (
-        cand.select("query_id", "vec_id", raw.alias("_raw"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= RECALL_K)
-        .select("query_id", "vec_id")
-    )
-    exact = cosine_topk_batch(
-        emb, [(q, qvecs[q]) for q in RECALL_QIDS], k=RECALL_K
-    ).select("query_id", "vec_id")
-    hits = ivf.join(exact, ["query_id", "vec_id"]).groupBy("query_id").agg(
-        F.count("*").alias("_n")
-    )
-    base = spark.createDataFrame([(q,) for q in RECALL_QIDS], "query_id int")
-    n = F.coalesce(F.col("_n"), F.lit(0))
-    return base.join(hits, "query_id", "left").select(
-        "query_id",
-        F.lit(RECALL_K).alias("k"),
-        n.cast("long").alias("n_hits"),
-        F.round(n / F.lit(float(RECALL_K)), 6).alias("recall"),
-    )
+    exact = cosine_topk_batch(emb, [(q, qvecs[q]) for q in RECALL_QIDS], k=RECALL_K)
+    return _recall(spark, ivf, exact)
 
 
 def _q_emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,8 +20,9 @@ probe-bracketed min-of-N cell —
   against the run-global minimum probe (retroactive re-tag — a run
   that STARTS degraded must not optimistically tag itself);
 - per entry the JSON carries {"min", "all", "clean", "probes"} in
-  "details", while "queries" keeps the flat name→min mapping the
-  driver's BENCH_r{N}.json comparison reads.
+  "details" (battery entries add "jobs": the Spark jobs one execution
+  ran, its noop write included), while "queries" keeps the flat
+  name→min mapping the driver's BENCH_r{N}.json comparison reads.
 
 Workload:
   1. every __spark_entry__.queries() operator at $SPARK_GRAFT_SF_DIR
@@ -183,7 +184,8 @@ class Meter:
         for name in self.details:
             self._fold(name)
             d = self.details[name]
-            out[name] = {k: d[k] for k in ("min", "all", "clean", "probes")}
+            out[name] = {k: d[k] for k in ("min", "all", "clean", "probes", "jobs")
+                         if k in d}
         return out
 
 
@@ -191,6 +193,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as entrymod
+    from tests.conftest import _jobs_run
     from zensearch_spark.caching import release
     from zensearch_spark.plans.index_build import build_index
     from zensearch_spark.plans.query_plan import BM25Index
@@ -219,18 +222,24 @@ def main() -> None:
     # the battery may spend at most ~55% of the budget on retries;
     # index build + query sections keep the rest
     meter.soft_deadline = time.monotonic() + DEADLINE_MIN * 60.0 * 0.55
+    jobs: dict[str, int] = {}
     for name, fn in entrymod.queries().items():
-        def one(fn=fn):
-            t0 = time.monotonic()
-            df = fn(spark, sf_dir)
-            force(df)
-            wall = time.monotonic() - t0
+        def one(fn=fn, name=name):
+            def timed():
+                t0 = time.monotonic()
+                df = fn(spark, sf_dir)
+                force(df)
+                return df, time.monotonic() - t0
+
+            # the Spark jobs of one execution, counted in a unique group
+            (df, wall), jobs[name] = _jobs_run(spark, timed)
             # free operator-pinned persisted intermediates so one
             # entry's cache never occupies executor memory later
             release(df)
             return wall
 
         timings[name] = meter.run(name, one)
+        meter.details[name]["jobs"] = jobs[name]
         log(f"[bench] {name}: {timings[name]}s "
             f"(all={meter.details[name]['all']}, "
             f"clean={meter.details[name]['clean']})")

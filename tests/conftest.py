@@ -53,12 +53,24 @@ def _jobs_run(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
-def _pushed_filters(df) -> str:
-    """The PushedFilters line of the (single) parquet scan in df's plan."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    lines = [ln for ln in plan.splitlines() if "PushedFilters:" in ln]
-    assert len(lines) == 1, plan
-    return lines[0].split("PushedFilters:", 1)[1].split(", ReadSchema:", 1)[0]
+def _pushed_filters(spark, fn) -> str:
+    """The PushedFilters of the one parquet scan ``fn()`` ran, read from
+    the physical plans of the SQL executions it started (the SQL status
+    store keeps them with the UI off). An eager operator returns a
+    local relation, whose own plan no longer holds the scan."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        ex = store.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+
+    before = set(executions())
+    fn()
+    plans = [e.physicalPlanDescription() for i, e in executions().items() if i not in before]
+    # an adaptive plan lists its final and initial scan alike
+    lines = {ln.strip() for p in plans for ln in p.splitlines() if "PushedFilters:" in ln}
+    assert len(lines) == 1, plans
+    return lines.pop().split("PushedFilters:", 1)[1].split(", ReadSchema:", 1)[0]
 
 
 def _row_group_stats(path: str, cols: list[str]) -> list[dict]:

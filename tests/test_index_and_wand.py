@@ -152,7 +152,7 @@ def test_blocks_shuffle_join_above_broadcast_bound(built, monkeypatch, tmp_path)
         assert pdf.equals(pdf.sort_values(keys, ignore_index=True)), f
 
 
-def test_one_term_scan_prunes_row_groups(built):
+def test_one_term_scan_prunes_row_groups(built, spark):
     """Blocks are flat parquet sorted by (term, salt, block_seq): across
     the files, in order, row-group term ranges ascend, so a one-term
     scan pushes ``term`` to parquet and its min/max statistics rule out
@@ -165,7 +165,7 @@ def test_one_term_scan_prunes_row_groups(built):
     hot = max(oracle.postings, key=lambda t: len(oracle.postings[t]))
     for term, most in ((rare, 2), (hot, len(groups) - 1)):
         scan = index._blocks.filter(F.col("term").isin([term]))
-        assert "term" in _pushed_filters(scan)
+        assert "term" in _pushed_filters(spark, scan.collect)
         matched = [g for g in groups if g["term"][0] <= term <= g["term"][1]]
         assert 0 < len(matched) <= most, (term, len(matched), len(groups))
 

@@ -134,8 +134,7 @@ def test_ann_probe_scan_prunes_partitions(spark, clustered, clustered_sketch):
     from zensearch_spark.operators.similarity import ann_topk_indexed, probe_buckets
 
     q = _qvec(clustered, 0)
-    df = ann_topk_indexed(spark, clustered_sketch, q, k=5)
-    pushed = _pushed_filters(df)
+    pushed = _pushed_filters(spark, lambda: ann_topk_indexed(spark, clustered_sketch, q, k=5))
     assert "table_id" in pushed and "bucket" in pushed, pushed
 
     probes = {
@@ -301,53 +300,75 @@ def test_gemm_matches_exact_pairs(spark, clustered):
     assert gemm == exact
 
 
-def test_batch_matches_single_probes(spark, clustered, clustered_sketch):
-    """ann_topk_batch (one job, union probe filter, per-query window
-    re-rank) must return exactly the per-query ann_topk_indexed rows."""
-    from zensearch_spark.operators.similarity import ann_topk_batch, ann_topk_indexed
+def test_batch_matches_single_probes(spark, clustered, clustered_sketch, ivf_index):
+    """A batch (shared scan, per-batch partial top-k, driver merge) must
+    return exactly the rows of each query's single probe, the one-query
+    batch of the same operator — ANN, IVF and exact cosine alike. Both
+    are eager local relations: their collect() runs no Spark job."""
+    from zensearch_spark.operators.ivf import ivf_topk, ivf_topk_batch
+    from zensearch_spark.operators.similarity import (
+        ann_topk_batch, ann_topk_indexed, cosine_topk, cosine_topk_batch,
+    )
 
-    qids = [0, 7, 42]
-    queries = [(vid, _qvec(clustered, vid), 10) for vid in qids]
-    batch = {}
-    for r in ann_topk_batch(spark, clustered_sketch, queries).collect():
-        batch.setdefault(r["query_id"], []).append((r["vec_id"], r["cosine"]))
-    for vid, q, k in queries:
-        single = [
-            (r["vec_id"], r["cosine"])
-            for r in ann_topk_indexed(spark, clustered_sketch, q, k=k).collect()
-        ]
-        assert batch.get(vid, []) == single, vid
+    path, cent = ivf_index
+    queries = [(vid, _qvec(clustered, vid), 10) for vid in (0, 7, 42)]
+    for batch_of, single_of in (
+        (lambda qs: ann_topk_batch(spark, clustered_sketch, qs),
+         lambda q, k: ann_topk_indexed(spark, clustered_sketch, q, k=k)),
+        (lambda qs: ivf_topk_batch(spark, spark.read.parquet(path), cent, qs, 4),
+         lambda q, k: ivf_topk(spark, path, cent, q, k=k, nprobe=4)),
+        (lambda qs: cosine_topk_batch(clustered, [(i, q) for i, q, _ in qs], 10),
+         lambda q, k: cosine_topk(clustered, q, k=k)),
+    ):
+        rows, jobs = _jobs_run(spark, batch_of(queries).collect)
+        assert jobs == 0
+        for vid, q, k in queries:
+            single, jobs = _jobs_run(spark, single_of(q, k).collect)
+            assert jobs == 0 and len(single) == k
+            assert [(r["vec_id"], r["cosine"]) for r in rows if r["query_id"] == vid] == [
+                (r["vec_id"], r["cosine"]) for r in single], vid
 
 
 @pytest.mark.parametrize("operator, request_kind, problem", [
     ("ann", "repeated_id", "query_id 1 appears more than once"),
     ("ann", "k_zero", "k must be >= 1"),
     ("ann", "k_negative", "k must be >= 1"),
+    ("ann", "mixed_dims", "query_id 1: query vector has 32 dimensions, expected 64"),
     ("cosine", "repeated_id", "query_id 1 appears more than once"),
     ("cosine", "k_zero", "k must be >= 1"),
+    ("cosine", "mixed_dims", "query_id 1: query vector has 32 dimensions, expected 64"),
+    ("ivf", "repeated_id", "query_id 1 appears more than once"),
+    ("ivf", "mixed_dims", "query_id 1: query vector has 32 dimensions, expected 64"),
+    ("ivf", "wrong_dim", "query_id 0: query vector has 32 dimensions, expected 64"),
 ])
 def test_bad_vector_batch_raises_before_any_job(
-    spark, clustered, clustered_sketch, operator, request_kind, problem
+    spark, clustered, clustered_sketch, ivf_index, operator, request_kind, problem
 ):
     """A vector batch whose queries share an id (their candidates would
-    be merged into one answer) or whose k is below 1 is refused on the
-    driver with a ValueError naming the problem, before any Spark job —
-    the same check the text batch makes."""
+    be merged into one answer), whose k is below 1, or whose query
+    vectors differ in length — or, for IVF, differ from the centroids'
+    dimension — is refused on the driver with a ValueError naming the
+    problem, before any Spark job; the text batch makes the same id and
+    k checks."""
+    from zensearch_spark.operators.ivf import ivf_topk_batch
     from zensearch_spark.operators.similarity import ann_topk_batch, cosine_topk_batch
 
     q1, q2 = _qvec(clustered, 0), _qvec(clustered, 1)
+    path, cent = ivf_index
+    cells = spark.read.parquet(path)  # its schema read is a job of its own
+    request = {
+        "repeated_id": [(1, q1, 3), (1, q2, 3)],
+        "k_zero": [(0, q1, 3), (1, q2, 0)],
+        "k_negative": [(0, q1, -1)],
+        "mixed_dims": [(0, q1, 3), (1, q2[:32], 3)],
+        "wrong_dim": [(0, q1[:32], 3)],
+    }[request_kind]
     call = {
-        ("ann", "repeated_id"):
-            lambda: ann_topk_batch(spark, clustered_sketch, [(1, q1, 3), (1, q2, 3)]),
-        ("ann", "k_zero"):
-            lambda: ann_topk_batch(spark, clustered_sketch, [(0, q1, 3), (1, q2, 0)]),
-        ("ann", "k_negative"):
-            lambda: ann_topk_batch(spark, clustered_sketch, [(0, q1, -1)]),
-        ("cosine", "repeated_id"):
-            lambda: cosine_topk_batch(clustered, [(1, q1), (1, q2)], k=3),
-        ("cosine", "k_zero"):
-            lambda: cosine_topk_batch(clustered, [(0, q1), (1, q2)], k=0),
-    }[(operator, request_kind)]
+        "ann": lambda: ann_topk_batch(spark, clustered_sketch, request),
+        "cosine": lambda: cosine_topk_batch(
+            clustered, [(i, q) for i, q, _ in request], k=min(k for *_, k in request)),
+        "ivf": lambda: ivf_topk_batch(spark, cells, cent, request, 4),
+    }[operator]
 
     def refused():
         with pytest.raises(ValueError, match=problem):
@@ -357,16 +378,37 @@ def test_bad_vector_batch_raises_before_any_job(
     assert jobs == 0
 
 
+@pytest.mark.parametrize("operator", ["ann", "cosine"])
+def test_wrong_dimension_names_both_dimensions(spark, clustered, clustered_sketch,
+                                               operator):
+    """Only the worker sees the data's dimension in the ANN and exact
+    cosine operators: a query of another length fails there with a
+    ValueError naming both dimensions."""
+    from pyspark.errors import PythonException
+    from zensearch_spark.operators.similarity import ann_topk_batch, cosine_topk_batch
+
+    q = _qvec(clustered, 0)[:32]
+    with pytest.raises(PythonException, match="ValueError: embedding has 64 dimensions, "
+                       "the query vectors have 32"):
+        if operator == "ann":
+            ann_topk_batch(spark, clustered_sketch, [(0, q, 3)])
+        else:
+            cosine_topk_batch(clustered, [(0, q)], k=3)
+
+
 def test_indexed_matches_numpy_ann(spark, clustered, clustered_sketch):
     """The persisted-sketch probe returns the rows of a NumPy pipeline
     written here from the planes alone: per-table sign buckets, the
     hamming-1 probe set around the query's bucket, candidates from ANY
     table, exact cosine re-rank by (cosine desc, vec_id asc), 6 dp."""
-    from zensearch_spark.operators.similarity import _planes, ann_topk_indexed
+    from zensearch_spark.operators.similarity import (
+        _planes, ann_topk_batch, ann_topk_indexed,
+    )
 
     k, n_planes, n_tables, seed = 10, 8, 4, 42
     ids, m = _np_matrix(clustered)
     weights = 1 << np.arange(n_planes)
+    want_of = {}
     for vid in (7, 99):
         q = np.asarray(_qvec(clustered, vid))
         cand = np.zeros(len(ids), dtype=bool)
@@ -379,12 +421,18 @@ def test_indexed_matches_numpy_ann(spark, clustered, clustered_sketch):
         cid, cm = ids[cand], m[cand]
         cos = (cm @ q) / (np.sqrt((cm * cm).sum(axis=1)) * np.sqrt(q @ q))
         top = np.lexsort((cid, -cos))[:k]
-        want = [(int(cid[i]), float(np.round(cos[i], 6))) for i in top]
+        want_of[vid] = want = [(int(cid[i]), float(np.round(cos[i], 6))) for i in top]
         got = [
             (r["vec_id"], r["cosine"])
             for r in ann_topk_indexed(spark, clustered_sketch, list(q), k=k).collect()
         ]
         assert got == want, vid
+    # one batch: a vector probed through several tables still ranks once
+    batch = ann_topk_batch(
+        spark, clustered_sketch, [(vid, _qvec(clustered, vid), k) for vid in want_of]
+    ).collect()
+    for vid, want in want_of.items():
+        assert [(r["vec_id"], r["cosine"]) for r in batch if r["query_id"] == vid] == want
 
 
 def test_probe_buckets_rejects_unsupported_hamming():
@@ -448,8 +496,7 @@ def test_ivf_probe_prunes_partitions(spark, clustered, ivf_index):
 
     path, cent = ivf_index
     q = _qvec(clustered, 0)
-    df = ivf_topk(spark, path, cent, q, k=5, nprobe=3)
-    pushed = _pushed_filters(df)
+    pushed = _pushed_filters(spark, lambda: ivf_topk(spark, path, cent, q, k=5, nprobe=3))
     assert "centroid_id" in pushed, pushed
 
     cells = probe_cells(cent, q, nprobe=3)

@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from zensearch_spark.operators.similarity import cosine_topk
+from zensearch_spark.operators.similarity import rerank_topk
+from zensearch_spark.operators.topk import check_queries, query_matrix
 
 
 def train_ivf_centroids(
@@ -178,11 +179,36 @@ def probe_cells(
 ) -> list[int]:
     """Driver-side centroid ranking: the nprobe nearest cells."""
     q = np.asarray(query_vec, dtype=np.float64)
-    q /= max(float(np.linalg.norm(q)), 1e-12)
+    q = q / max(float(np.linalg.norm(q)), 1e-12)
     sims = centroids @ q
     # stable sort: exact dot ties resolve to the LOWEST cell id, the
     # same tiebreak the SQL oracle's (dot DESC, cell ASC) window uses
     return sorted(int(c) for c in np.argsort(-sims, kind="stable")[:nprobe])
+
+
+def ivf_topk_batch(
+    spark,
+    cells: DataFrame,
+    centroids: np.ndarray,
+    queries: list[tuple[int, list[float], int]],
+    nprobe: int = 8,
+) -> DataFrame:
+    """Approximate top-k for a query SET: each query reads only its
+    ``nprobe`` nearest cells of ``cells`` — (vec_id, embedding,
+    centroid_id) rows, the sorted index (where the union of probed
+    cells is a pushed-down ``centroid_id IN (...)``) or assign_centroids'
+    output — and similarity.rerank_topk ranks the candidates.
+    ``queries`` = [(query_id, query_vec, k)], valid per
+    topk.check_queries and of the centroids' dimension. Eager; returns
+    (query_id, vec_id, cosine) ordered by (query_id, cosine desc,
+    vec_id asc)."""
+    check_queries(queries)
+    qm = query_matrix(queries, dim=centroids.shape[1])
+    probe_rows = [(int(qid), c) for (qid, _vec, _k), q in zip(queries, qm)
+                  for c in probe_cells(centroids, q, nprobe)]
+    probes = spark.createDataFrame(probe_rows, "query_id int, centroid_id int")
+    cand = cells.filter(F.col("centroid_id").isin(sorted({c for _, c in probe_rows})))
+    return rerank_topk(cand.join(F.broadcast(probes), "centroid_id"), queries, qm)
 
 
 def ivf_topk(
@@ -193,11 +219,8 @@ def ivf_topk(
     k: int = 20,
     nprobe: int = 8,
 ) -> DataFrame:
-    """Approximate top-k: read only the nprobe nearest cells, through
-    one pushed-down ``centroid_id IN (...)`` over the sorted index."""
-    cells = probe_cells(centroids, query_vec, nprobe)
-    cand = spark.read.parquet(index_path).filter(
-        F.col("centroid_id").isin(cells)
-    )
-    return cosine_topk(cand, query_vec, k=k, id_col="vec_id",
-                       vec_col="embedding")
+    """Approximate top-k of one query: the one-query batch of
+    ivf_topk_batch over the sorted index. Returns (vec_id, cosine)."""
+    return ivf_topk_batch(
+        spark, spark.read.parquet(index_path), centroids, [(0, query_vec, k)], nprobe
+    ).select("vec_id", "cosine")

@@ -6,7 +6,9 @@ the brute force is a full scan per probe; the sketch turns it into a
 bucket-pruned scan with exact re-rank inside candidate buckets.
 
 Every vector kernel is float64 NumPy behind an Arrow boundary: cosines
-are one matmul per batch, and every sign-sketch bucket (index build,
+are one matmul per batch, every top-k (exact, sketch probe, IVF probe)
+ends in the one tail _ranked — each batch keeps its partial top-k and
+the driver merges them — and every sign-sketch bucket (index build,
 near-dup blocking, query probes) comes from the one kernel
 _sign_buckets. No Catalyst higher-order-function fold is planned:
 those are interpreted per element and re-evaluated per referencing
@@ -17,8 +19,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from zensearch_spark.operators.topk import check_queries, merge_topk, query_matrix
 
 # Float sums in the matmuls below may reassociate at ~1e-16 relative;
 # every consumer rounds scores to 6 dp and orders continuous-valued
@@ -31,40 +38,6 @@ def _stack64(vals) -> "np.ndarray":
     return np.stack([np.asarray(v, dtype=np.float64) for v in vals])
 
 
-def _cosine_lit(col, query_vec: list[float]) -> F.Column:
-    """cosine(col, literal query vector) as one Arrow-batched matmul."""
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    qn = float(np.sqrt(q @ q))
-
-    @pandas_udf("double")
-    def cos(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series(np.empty(0, np.float64))
-        m = _stack64(v.to_numpy())
-        return pd.Series((m @ q) / (np.sqrt((m * m).sum(axis=1)) * qn))
-
-    return cos(col)
-
-
-def _cosine_pair(a_col, b_col) -> F.Column:
-    """cosine(a, b) for two array columns (row-wise), Arrow-batched."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if not len(a):
-            return pd.Series(np.empty(0, np.float64))
-        ma = _stack64(a.to_numpy())
-        mb = _stack64(b.to_numpy())
-        num = np.einsum("ij,ij->i", ma, mb)
-        den = np.sqrt((ma * ma).sum(axis=1)) * np.sqrt((mb * mb).sum(axis=1))
-        return pd.Series(num / den)
-
-    return cos(a_col, b_col)
-
-
 def cosine_topk(
     emb: DataFrame,
     query_vec: list[float],
@@ -72,20 +45,12 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact brute-force cosine top-k against a literal query vector.
-
-    One Arrow matmul per batch (_cosine_lit); the raw value is
-    computed ONCE and rounded in a later projection, so the kernel is
-    not evaluated a second time for the rounded copy."""
-    raw = _cosine_lit(F.col(vec_col), query_vec)
-    # sort on the raw value, round only for display — rounding before
-    # the sort would turn 1e-7 gaps into ties and break oracle parity
-    return (
-        emb.select(F.col(id_col).alias("vec_id"), raw.alias("_raw"))
-        .orderBy(F.desc("_raw"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("_raw", 6).alias("cosine"))
-    )
+    """Exact brute-force cosine top-k against one query vector: the
+    one-query batch of cosine_topk_batch. Returns (vec_id, cosine),
+    ordered by (cosine desc, vec_id asc)."""
+    return cosine_topk_batch(
+        emb, [(0, query_vec)], k, id_col, vec_col
+    ).select("vec_id", "cosine")
 
 
 def _planes(dim: int, n_planes: int, seed: int, table: int = 0):
@@ -119,7 +84,6 @@ def _sketch_rows(
     ONE scan evaluates _sign_buckets once per Arrow batch for all T
     tables, and stack() fans the T bucket ids out to (table_id, bucket)
     rows — one sketch scan per table would read the input T times."""
-    from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
     # single-file inputs otherwise compute every bucket on one core
@@ -233,46 +197,18 @@ def ann_topk_indexed(
     probe_hamming: int = 1,
     seed: int = 42,
 ) -> DataFrame:
-    """Approximate NN over the PERSISTED multi-table sketch: read only
-    each table's probe buckets, dedupe candidates across tables,
-    exact-cosine re-rank. The (table_id, bucket) predicate is a pushed
-    filter on the sorted sketch (PLANS.md shows PushedFilters on this
-    scan) — row groups of unprobed buckets are skipped."""
-    by_table = {
-        t: set(probe_buckets(query_vec, n_planes, probe_hamming, seed, table=t))
-        for t in range(n_tables)
-    }
-    cand = (
-        spark.read.parquet(index_path)
-        .filter(_probe_condition(by_table))
-        .select("vec_id", "embedding")
-    )
-    # Round 6: score BEFORE deduping and dedupe with a hash-aggregable
-    # max over the (identical) per-copy cosines — dropDuplicates on a
-    # row carrying the embedding array forced a SortAggregate +
-    # array-typed first() in the round-5 plan. Same result: every
-    # cross-table copy of a vec_id scores identically.
-    raw = _cosine_lit(F.col("embedding"), query_vec)
-    return (
-        cand.select("vec_id", raw.alias("_raw"))
-        .groupBy("vec_id")
-        .agg(F.max("_raw").alias("_raw"))
-        .orderBy(F.desc("_raw"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("_raw", 6).alias("cosine"))
-    )
+    """Approximate NN over the PERSISTED multi-table sketch: the
+    one-query batch of ann_topk_batch — read only each table's probe
+    buckets (a pushed filter on the sorted sketch: row groups of
+    unprobed buckets are skipped), exact-cosine re-rank, one row per
+    vec_id. Returns (vec_id, cosine)."""
+    return ann_topk_batch(
+        spark, index_path, [(0, query_vec, k)], n_planes, n_tables,
+        probe_hamming, seed,
+    ).select("vec_id", "cosine")
 
 
-def _pair_schema():
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("vec_a", T.LongType(), False),
-            T.StructField("vec_b", T.LongType(), False),
-            T.StructField("cosine", T.DoubleType(), False),
-        ]
-    )
+_PAIRS = "vec_a bigint, vec_b bigint, cosine double"
 
 
 def _pack_blocks(
@@ -283,39 +219,36 @@ def _pack_blocks(
     as bytes): downstream block joins then move packed ROWS (one per
     block), never per-vector rows. Shared by the all-pairs GEMM sweep
     and the candidate-pair GEMM verify."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    pack_schema = T.StructType(
-        [
-            T.StructField("blk", T.IntegerType(), False),
-            T.StructField("n", T.IntegerType(), False),
-            T.StructField("ids", T.BinaryType(), False),
-            T.StructField("mat", T.BinaryType(), False),
-        ]
-    )
-
     def pack(key, pdf: pd.DataFrame):
         ids = pdf["vid"].to_numpy(np.int64)
         mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
         mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        return pd.DataFrame(
-            [
-                {
-                    "blk": int(key[0]),
-                    "n": len(ids),
-                    "ids": ids.tobytes(),
-                    "mat": mat.tobytes(),
-                }
-            ]
-        )
+        return pd.DataFrame({"blk": [int(key[0])], "n": [len(ids)],
+                             "ids": [ids.tobytes()], "mat": [mat.tobytes()]})
 
     blocked = emb.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("v"),
         F.floor(F.col(id_col) / F.lit(block)).cast("int").alias("blk"),
     )
-    return blocked.groupBy("blk").applyInPandas(pack, pack_schema)
+    return blocked.groupBy("blk").applyInPandas(pack, "blk int, n int, ids binary, mat binary")
+
+
+def _block_pairs(tasks: DataFrame, packed: DataFrame) -> DataFrame:
+    """``tasks`` rows keyed by (blk_a, blk_b) joined with the packed
+    rows of both blocks (columns suffixed _a / _b), one block pair per
+    task group."""
+    def side(s):
+        return packed.select(*[F.col(c).alias(f"{c}_{s}") for c in ("blk", "n", "ids", "mat")])
+
+    return tasks.join(side("a"), "blk_a").join(side("b"), "blk_b").repartition("blk_a", "blk_b")
+
+
+def _unpack(r) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(ids_a, ids_b, mat_a, mat_b) of one _block_pairs row."""
+    return (np.frombuffer(r.ids_a, np.int64), np.frombuffer(r.ids_b, np.int64),
+            np.frombuffer(r.mat_a, np.float64).reshape(r.n_a, -1),
+            np.frombuffer(r.mat_b, np.float64).reshape(r.n_b, -1))
 
 
 def embedding_neardup_gemm(
@@ -343,8 +276,6 @@ def embedding_neardup_gemm(
 
     The returned DataFrame pins a persisted intermediate — call
     ``zensearch_spark.caching.release(df)`` after materializing."""
-    import pandas as pd
-
     packed = _pack_blocks(emb, block, id_col, vec_col).persist()
     # block-pair grid as a DataFrame: cross-join the (tiny) block-id
     # projections with the upper-triangular filter — B²/2 two-int rows,
@@ -357,26 +288,13 @@ def embedding_neardup_gemm(
     ga = packed.select(F.col("blk").alias("blk_a"))
     gb = packed.select(F.col("blk").alias("blk_b"))
     grid_df = ga.join(gb, F.col("blk_a") <= F.col("blk_b"))
-    pa = packed.select(
-        F.col("blk").alias("blk_a"), F.col("n").alias("na"),
-        F.col("ids").alias("ids_a"), F.col("mat").alias("mat_a"),
-    )
-    pb = packed.select(
-        F.col("blk").alias("blk_b"), F.col("n").alias("nb"),
-        F.col("ids").alias("ids_b"), F.col("mat").alias("mat_b"),
-    )
-    joined = grid_df.join(pa, "blk_a").join(pb, "blk_b").repartition(
-        "blk_a", "blk_b"
-    )
+    joined = _block_pairs(grid_df, packed)
 
     def gemm(batches):
         for pdf in batches:
             outs = []
             for r in pdf.itertuples(index=False):
-                ida = np.frombuffer(r.ids_a, np.int64)
-                idb = np.frombuffer(r.ids_b, np.int64)
-                ma = np.frombuffer(r.mat_a, np.float64).reshape(r.na, -1)
-                mb = np.frombuffer(r.mat_b, np.float64).reshape(r.nb, -1)
+                ida, idb, ma, mb = _unpack(r)
                 cos = np.round(ma @ mb.T, 6)
                 ii, jj = np.nonzero(
                     (cos >= threshold) & (ida[:, None] < idb[None, :])
@@ -396,7 +314,7 @@ def embedding_neardup_gemm(
 
     from zensearch_spark.caching import pin
 
-    return pin(joined.mapInPandas(gemm, _pair_schema()), packed)
+    return pin(joined.mapInPandas(gemm, _PAIRS), packed)
 
 
 def verify_pairs_gemm(
@@ -428,8 +346,6 @@ def verify_pairs_gemm(
 
     The returned DataFrame pins a persisted intermediate — call
     ``zensearch_spark.caching.release(df)`` after materializing."""
-    import pandas as pd
-
     packed = _pack_blocks(emb, block, id_col, vec_col).persist()
     tasks = (
         pairs.select(
@@ -444,26 +360,13 @@ def verify_pairs_gemm(
             F.collect_list("vec_b").alias("cand_b"),
         )
     )
-    pa = packed.select(
-        F.col("blk").alias("blk_a"), F.col("ids").alias("ids_a"),
-        F.col("mat").alias("mat_a"), F.col("n").alias("na"),
-    )
-    pb = packed.select(
-        F.col("blk").alias("blk_b"), F.col("ids").alias("ids_b"),
-        F.col("mat").alias("mat_b"), F.col("n").alias("nb"),
-    )
-    joined = tasks.join(pa, "blk_a").join(pb, "blk_b").repartition(
-        "blk_a", "blk_b"
-    )
+    joined = _block_pairs(tasks, packed)
 
     def verify(batches):
         for pdf in batches:
             outs = []
             for r in pdf.itertuples(index=False):
-                ida = np.frombuffer(r.ids_a, np.int64)
-                idb = np.frombuffer(r.ids_b, np.int64)
-                ma = np.frombuffer(r.mat_a, np.float64).reshape(r.na, -1)
-                mb = np.frombuffer(r.mat_b, np.float64).reshape(r.nb, -1)
+                ida, idb, ma, mb = _unpack(r)
                 pos_a = {int(v): i for i, v in enumerate(ida)}
                 pos_b = {int(v): i for i, v in enumerate(idb)}
                 ia = np.fromiter(
@@ -493,7 +396,7 @@ def verify_pairs_gemm(
 
     from zensearch_spark.caching import pin
 
-    return pin(joined.mapInPandas(verify, _pair_schema()), packed)
+    return pin(joined.mapInPandas(verify, _PAIRS), packed)
 
 
 def embedding_neardup_lsh(
@@ -552,6 +455,63 @@ def embedding_neardup_lsh(
     return pin(verified, sketch)
 
 
+RANKED = "query_id int, vec_id bigint, cosine double"
+
+
+def _embeddings(batch: pa.RecordBatch, dim: int) -> np.ndarray:
+    """(n, dim) float64 rows of an Arrow batch's ``embedding`` column;
+    only the worker sees the data's dimension, so it checks it here."""
+    col = batch.column("embedding")
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if (lens != dim).any():
+        raise ValueError(f"embedding has {lens[lens != dim][0]} dimensions, "
+                         f"the query vectors have {dim}")
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(lens), dim)
+
+
+def _ranked(src: DataFrame, score, queries: list[tuple[int, object, int]]) -> DataFrame:
+    """THE vector top-k tail: ``score(batch)`` gives the (query_id,
+    vec_id, cosine) arrays of one Arrow batch of ``src``, each batch
+    keeps its per-query top k, and the driver merges the fetched
+    partial lists — both with topk.merge_topk. Eager: the result is a
+    local relation, so collecting it runs no job. Cosines rank raw and
+    are rounded to 6 dp for display only (rounding first would turn
+    1e-7 gaps into ties and break oracle parity)."""
+    k_of = {int(qid): int(k) for qid, _vec, k in queries}
+
+    def kernel(batches):
+        for b in batches:
+            if b.num_rows and k_of:
+                part = pa.table(dict(zip(("query_id", "vec_id", "cosine"), score(b))))
+                yield from merge_topk(part, k_of, "vec_id", "cosine").to_batches()
+
+    cands = src.mapInArrow(kernel, RANKED).toArrow()
+    return src.sparkSession.createDataFrame(
+        merge_topk(cands, k_of, "vec_id", "cosine"), RANKED
+    ).select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"))
+
+
+def rerank_topk(cand: DataFrame, queries: list[tuple[int, object, int]],
+                qm: np.ndarray) -> DataFrame:
+    """Exact-cosine re-rank of probed (query_id, vec_id, embedding)
+    rows, shared by the ANN and IVF probes: each row is scored against
+    its own query's row of ``qm`` (request order), which ships in the
+    kernel's closure."""
+    qids = np.asarray([int(qid) for qid, _vec, _k in queries])
+    by_id = np.argsort(qids)
+    qn = np.sqrt((qm * qm).sum(axis=1))
+
+    def score(b):
+        qid = b.column("query_id").to_numpy()
+        at = by_id[np.searchsorted(qids[by_id], qid)]
+        m = _embeddings(b, qm.shape[1])
+        cos = np.einsum("ij,ij->i", m, qm[at]) / (np.sqrt((m * m).sum(axis=1)) * qn[at])
+        return qid, b.column("vec_id").to_numpy(), cos
+
+    return _ranked(cand.select("query_id", "vec_id", "embedding"), score, queries)
+
+
 def ann_topk_batch(
     spark,
     index_path: str,
@@ -561,59 +521,35 @@ def ann_topk_batch(
     probe_hamming: int = 1,
     seed: int = 42,
 ) -> DataFrame:
-    """Whole query set over the persisted sketch in ONE Spark job —
-    the vector twin of the WAND batch evaluator (operators/wand.py
-    wand_topk_batch): probe q/s becomes a throughput number instead
-    of a per-job-overhead number.
+    """Whole query set over the persisted sketch — the vector twin of
+    the WAND batch evaluator (operators/wand.py wand_topk_batch): probe
+    q/s becomes a throughput number instead of a per-job-overhead
+    number. ``queries`` = [(query_id, query_vec, k)], valid per
+    topk.check_queries, all vectors of one length.
 
-    ``queries`` = [(query_id, query_vec, k)]. Plan: the UNION of all
-    queries' probe buckets forms one pushed-down _probe_condition (row
-    groups of unprobed buckets are skipped), a broadcast (query_id,
-    table_id, bucket) map re-associates candidates to queries, and a
-    broadcast (query_id, qvec, k) row supplies the per-query vector
-    for the exact-cosine re-rank + per-query window top-k. Returns
-    (query_id, vec_id, cosine) ordered by (query_id, rank).
-    """
-    from pyspark.sql import Window
-
-    from zensearch_spark.operators.wand import check_queries
-
+    Plan: the UNION of all queries' probe buckets forms one pushed-down
+    _probe_condition (row groups of unprobed buckets are skipped), a
+    broadcast (query_id, table_id, bucket) map re-associates candidates
+    to queries, and rerank_topk ranks them. Eager: an 8-query batch at
+    sf0.01 runs 3 Spark jobs (the sketch's schema read, the broadcast,
+    the re-rank). Returns (query_id, vec_id, cosine) ordered by
+    (query_id, cosine desc, vec_id asc)."""
     check_queries(queries)
+    qm = query_matrix(queries)
     probe_rows: list[tuple[int, int, int]] = []
     by_table: dict[int, set[int]] = {t: set() for t in range(n_tables)}
-    qrows = []
-    for qid, vec, k in queries:
-        qrows.append((int(qid), [float(x) for x in vec], int(k)))
+    for (qid, _vec, _k), q in zip(queries, qm):
         for t in range(n_tables):
-            for b in probe_buckets(vec, n_planes, probe_hamming, seed, table=t):
+            for b in probe_buckets(q, n_planes, probe_hamming, seed, table=t):
                 probe_rows.append((int(qid), t, int(b)))
                 by_table[t].add(int(b))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id int, table_id int, bucket bigint"
-    )
-    qdf = spark.createDataFrame(qrows, "query_id int, qvec array<double>, k int")
-    # Score each candidate COPY first (Arrow matmul — cheap), then
-    # collapse (query_id, vec_id) duplicates with a hash-aggregable max
-    # instead of dropDuplicates over rows that carry the embedding
-    # array (array-typed first() forced SortAggregate). Copies of a
-    # vec_id score identically, so the result is the same.
+    probes = spark.createDataFrame(probe_rows, "query_id int, table_id int, bucket bigint")
     cand = (
         spark.read.parquet(index_path)
         .filter(_probe_condition(by_table))
         .join(F.broadcast(probes), ["table_id", "bucket"])
-        .join(F.broadcast(qdf), "query_id")
     )
-    raw = _cosine_pair(F.col("embedding"), F.col("qvec"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("_raw"), F.asc("vec_id"))
-    return (
-        cand.select("query_id", "vec_id", "k", raw.alias("_raw"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.max("_raw").alias("_raw"), F.first("k").alias("k"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= F.col("k"))
-        .orderBy("query_id", "rn")
-        .select("query_id", "vec_id", F.round("_raw", 6).alias("cosine"))
-    )
+    return rerank_topk(cand, queries, qm)
 
 
 def cosine_topk_batch(
@@ -624,64 +560,32 @@ def cosine_topk_batch(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact brute-force cosine top-k for a query SET in ONE scan —
-    the exact twin of ann_topk_batch (and the recall denominator for
-    the ann_recall/ivf_recall correctness entries): broadcast the
-    (query_id, qvec) table, one join-expanded pass over the corpus,
-    per-query window top-k. Returns (query_id, vec_id, cosine).
+    the exact twin of ann_topk_batch and the recall denominator of the
+    ann_recall/ivf_recall entries. Returns (query_id, vec_id, cosine)
+    ordered by (query_id, cosine desc, vec_id asc).
 
-    At 100 TB this is the honest baseline shape — |Q| small and in
-    the task closure, corpus scanned once regardless of |Q| — while
-    the sketch/IVF paths above are the sub-linear production paths.
-
-    Round 6 (guide §8): the round-5 crossJoin duplicated every
-    embedding |Q| times and shipped a qvec copy per row through the
-    scoring expression; now ONE mapInPandas computes the whole
-    (batch × |Q|) cosine matrix as a single float64 GEMM with the
-    query matrix in the closure — the scan crosses the Python
-    boundary once, queries never cross at all."""
-    from pyspark.sql import Window
-
-    from zensearch_spark.operators.wand import check_queries
-
-    check_queries([(qid, vec, k) for qid, vec in queries])
-    qids = np.asarray([int(q) for q, _ in queries], dtype=np.int32)
-    qm = np.stack(
-        [np.asarray(v, dtype=np.float64) for _, v in queries]
-    )  # (|Q|, dim)
+    At 100 TB this is the honest baseline shape — |Q| small and in the
+    task closure, corpus scanned once regardless of |Q| — while the
+    sketch/IVF paths are the sub-linear production paths. Each Arrow
+    batch's (batch × |Q|) cosine matrix is one float64 GEMM, and only
+    its per-query top k leaves the task."""
+    request = [(qid, vec, k) for qid, vec in queries]
+    check_queries(request)
+    qm = query_matrix(request)
+    qids = np.asarray([int(qid) for qid, _vec in queries], np.int32)
     qn = np.sqrt((qm * qm).sum(axis=1))
-    nq = len(qids)
 
-    def scores(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = _stack64(pdf["embedding"].to_numpy())
-            cos = (m @ qm.T) / (
-                np.sqrt((m * m).sum(axis=1))[:, None] * qn[None, :]
-            )
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(qids, len(m)),
-                    "vec_id": np.repeat(
-                        pdf["vec_id"].to_numpy(np.int64), nq
-                    ),
-                    "_raw": cos.ravel(),
-                }
-            )
+    def score(b):
+        m = _embeddings(b, qm.shape[1])
+        cos = (m @ qm.T) / (np.sqrt((m * m).sum(axis=1))[:, None] * qn[None, :])
+        ids = b.column("vec_id").to_numpy()
+        return np.tile(qids, len(m)), np.repeat(ids, len(qids)), cos.ravel()
 
     src = emb.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+        F.col(id_col).cast("long").alias("vec_id"),
+        F.col(vec_col).alias("embedding"),
     )
     par = emb.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < par:
         src = src.repartition(par)  # single-file scans (guide §2.5)
-    cand = src.mapInPandas(
-        scores, "query_id int, vec_id bigint, _raw double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_raw"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .orderBy("query_id", "rn")
-        .select("query_id", "vec_id", F.round("_raw", 6).alias("cosine"))
-    )
+    return _ranked(src, score, request)

@@ -18,8 +18,9 @@ distributed two-level top-k:
   so final floats match the NumPy oracle and the naive DataFrame
   path (three-way agreement, SURVEY §5.2 layer 4);
 - per-group top-k rows (≤ groups·k per query) are fetched once as
-  Arrow and merged on the driver by one NumPy lexsort — no window or
-  sort exchange after the cogroup.
+  Arrow and merged on the driver by topk.merge_topk, the tail every
+  batched ranking operator shares — no window or sort exchange after
+  the cogroup.
 
 Queries run BATCHED: the whole query set shares one salt cogroup and,
 within a salt group, one decode cache (a block decoded for query A
@@ -44,6 +45,7 @@ from pyspark.sql import types as T
 from zensearch_spark import B, K1
 from zensearch_spark.functions.codec import decode_block
 from zensearch_spark.functions.tokenizer import tokenize_query
+from zensearch_spark.operators.topk import merge_topk
 
 EPS = 1e-9
 
@@ -403,33 +405,6 @@ def evaluate_salt_group(
     )
 
 
-def _merge_topk(cands: pa.Table, k_of: dict[int, int]) -> pa.Table:
-    """Merge the per-salt-group top-k lists: each query's first
-    ``k_of[query_id]`` rows by (query_id, score desc, doc_id asc)."""
-    qid = cands["query_id"].to_numpy()
-    order = np.lexsort((cands["doc_id"].to_numpy(), -cands["score"].to_numpy(), qid))
-    qids, starts, counts = np.unique(qid[order], return_index=True, return_counts=True)
-    rank = np.arange(len(order)) - np.repeat(starts, counts)
-    limit = np.repeat([k_of[q] for q in qids.tolist()], counts)
-    return cands.take(order[rank < limit])
-
-
-def check_queries(queries: list[tuple[int, object, int]]) -> None:
-    """Reject a (query_id, query, k) request a batch top-k operator
-    would answer wrongly or fail on inside a Python worker: query ids
-    must be unique (each query's top k is keyed by id, so two queries
-    sharing an id would be merged into one answer) and every k must be
-    at least 1. The text and vector batches alike call it before any
-    Spark job."""
-    seen: set = set()
-    for qid, _query, k in queries:
-        if qid in seen:
-            raise ValueError(f"query_id {qid!r} appears more than once in the request")
-        seen.add(qid)
-        if k < 1:
-            raise ValueError(f"query_id {qid!r}: k must be >= 1, got {k!r}")
-
-
 def wand_topk_batch(
     spark: SparkSession,
     blocks: DataFrame,
@@ -444,7 +419,7 @@ def wand_topk_batch(
     salt cogroup's Spark jobs run inside this call and the result is a
     local relation, so collecting it runs no further job.
 
-    ``queries``: [(query_id, query_text, k)], valid per check_queries.
+    ``queries``: [(query_id, query_text, k)], valid per topk.check_queries.
     ``term_rows``: collected term_dict rows covering the union of all
     query terms (the broadcast dictionary).
     ``doc_lens``: the per-salt doc_len sidecar table, cogrouped with
@@ -481,4 +456,6 @@ def wand_topk_batch(
         .applyInPandas(run, schema=TOPK_SCHEMA)
     )
     k_of = {qid: k for qid, _, k in parsed}
-    return spark.createDataFrame(_merge_topk(cands.toArrow(), k_of), TOPK_SCHEMA)
+    return spark.createDataFrame(
+        merge_topk(cands.toArrow(), k_of, "doc_id", "score"), TOPK_SCHEMA
+    )

@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 
 from zensearch_spark.catalog import read_table
 from zensearch_spark.functions.tokenizer import tokenize_query
-from zensearch_spark.operators.wand import check_queries, wand_topk_batch
+from zensearch_spark.operators.topk import check_queries
+from zensearch_spark.operators.wand import wand_topk_batch
 from zensearch_spark.plans.index_build import IndexPaths
 
 
